@@ -78,14 +78,19 @@ def cmd_checkpoint_extract(args) -> int:
 
 
 def cmd_asof(args) -> int:
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     spark = _spark(args)
     from ifeatureomega_cli_spark.operators.asof import asof_join
 
     left = spark.read.parquet(args.left)
     right = spark.read.parquet(args.right)
     out = asof_join(left, right, on=args.on, ts=args.ts)
-    out.write.mode("overwrite").parquet(args.output)
-    print(json.dumps({"rows": spark.read.parquet(args.output).count()}))
+    obs = Observation()
+    (out.observe(obs, F.count(F.lit(1)).alias("rows"))
+     .write.mode("overwrite").parquet(args.output))
+    print(json.dumps({"rows": obs.get["rows"]}))
     return 0
 
 

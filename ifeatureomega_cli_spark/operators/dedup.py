@@ -167,6 +167,14 @@ def _parallelize(df: DataFrame) -> DataFrame:
     return df
 
 
+def _shuffle_width(spark) -> int:
+    """The session's `spark.sql.shuffle.partitions` as a partition count.
+    A non-numeric value such as "auto" (some Spark distributions let AQE
+    choose the count) falls back to the default parallelism."""
+    value = spark.conf.get("spark.sql.shuffle.partitions")
+    return int(value) if value.isdigit() else spark.sparkContext.defaultParallelism
+
+
 # the 31-bit Mersenne prime used by the md5-portable minhash variant:
 # products a*h stay < 2^62, exact in int64 on BOTH engines (numpy and
 # DuckDB BIGINT), so a SQL oracle can recompute signatures value-for-value
@@ -532,7 +540,7 @@ def ngram_jaccard_pairs(
     # to one task; an explicit round-robin width (which AQE respects)
     # keeps the expansion parallel.  Width = shuffle.partitions:
     # scale-adaptive via session conf, not a local constant.
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_part = _shuffle_width(df.sparkSession)
     grouped = (kept.groupBy("shingle").agg(F.collect_list("__id").alias("ids"))
                .repartition(n_part))
 
@@ -1135,7 +1143,7 @@ def embedding_dup_pairs_exact(
     # the kernel on a handful of tasks (measured: 25 tiles on 4 tasks at
     # sf1).  An explicit round-robin width (respected by AQE) spreads one
     # tile per task; width from the session conf, not a local constant.
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_part = _shuffle_width(df.sparkSession)
     return chunks.crossJoin(blocks).repartition(n_part).mapInArrow(
         gen, schema="id_a long, id_b long, cosine double")
 

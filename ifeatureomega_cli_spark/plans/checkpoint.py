@@ -1,14 +1,27 @@
-"""Checkpoint/resume with per-partition lineage + metrics (north_rule).
+"""Checkpoint/resume with per-bucket lineage + metrics (north_rule).
 
-A run processes the source in `n_buckets` hash buckets of the entity key.
-Completed buckets are recorded in a manifest (parquet, append-only) with
-row counts and throughput; a resumed run recomputes ONLY missing buckets.
-Output is written partitioned by bucket, so a re-run overwrites a bucket
-idempotently (dynamic partition overwrite) — no double counting.
+A run processes the source in `n_buckets` hash buckets of the entity key,
+split into at most `waves` waves of buckets.  Each wave is ONE Spark
+action: the partitioned write of its output.  An Observation on the
+written rows counts them per bucket during that write, so nothing is read
+back.  Output is written partitioned by bucket, so a re-run overwrites a
+bucket idempotently (dynamic partition overwrite) — no double counting.
 
-This is the parquet-dir analogue of Iceberg snapshot checkpointing: on a
-real cluster, point `out_dir` at an Iceberg table and the manifest becomes
-`snapshot-id` bookkeeping for free — the exact read-back path
+Completed buckets are recorded in a manifest: a directory of parquet
+files, one per wave, appended by the driver with pyarrow (no Spark job).
+Each file is written under a hidden temp name and renamed into place, so
+a crash leaves a whole file or none.  A manifest row holds the bucket, its
+row count, the run id, when it finished, and `seconds` / `rows_per_sec`:
+those two are the numbers of the whole wave the bucket ran in, not of the
+bucket alone.  A resumed run recomputes ONLY the buckets missing from the
+manifest.  Manifests written by Spark (`part-*.parquet`) read the same way.
+
+`out_dir` must be a path the driver can read and write directly: the
+manifest lives there and `os.path` checks it.
+
+This is the parquet-dir analogue of Iceberg snapshot checkpointing: point
+`out_dir` at an Iceberg table and the manifest becomes `snapshot-id`
+bookkeeping for free — the exact read-back path
 (`load_table(..., snapshot_id=...)` time travel) is exercised by
 tests/test_cli_tables.py::test_iceberg_roundtrip_and_time_travel, which
 runs automatically wherever the Iceberg runtime jar is on the classpath.
@@ -22,10 +35,18 @@ import time
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ifeatureomega_cli_spark.plans.partitioning import bucket_by
+
+_MANIFEST_SCHEMA = pa.schema([
+    ("bucket", pa.int32()), ("n_rows", pa.int64()), ("seconds", pa.float64()),
+    ("rows_per_sec", pa.float64()), ("run_id", pa.string()),
+    ("finished_at", pa.float64()),
+])
 
 
 class CheckpointedRun:
@@ -42,42 +63,49 @@ class CheckpointedRun:
     # -- lineage --------------------------------------------------------
 
     def completed_buckets(self) -> set[int]:
-        if not os.path.isdir(self.manifest_dir):
+        """Buckets recorded in the manifest, read on the driver.  An absent
+        or empty manifest means nothing is done; a manifest file that
+        cannot be read raises rather than silently recomputing the run."""
+        if not os.path.isdir(self.manifest_dir) or not any(
+                f.startswith("part-") and f.endswith(".parquet")
+                for f in os.listdir(self.manifest_dir)):
             return set()
-        try:
-            m = self.spark.read.parquet(self.manifest_dir)
-        except Exception:
-            return set()
-        return {r["bucket"] for r in m.select("bucket").distinct().collect()}
+        # read_table skips `_SUCCESS`, `.crc` and hidden temp files
+        table = pq.read_table(self.manifest_dir, columns=["bucket"])
+        return set(table["bucket"].to_pylist())
 
     def _record(self, rows: list[dict]) -> None:
+        """Append one manifest file holding `rows` (one wave)."""
         if not rows:
             return
-        self.spark.createDataFrame(
-            [(r["bucket"], r["n_rows"], r["seconds"], r["rows_per_sec"],
-              r["run_id"], r["finished_at"]) for r in rows],
-            "bucket int, n_rows long, seconds double, rows_per_sec double, "
-            "run_id string, finished_at double",
-        ).write.mode("append").parquet(self.manifest_dir)
+        os.makedirs(self.manifest_dir, exist_ok=True)
+        name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+        tmp = os.path.join(self.manifest_dir, "." + name)
+        with open(tmp, "wb") as f:
+            pq.write_table(pa.Table.from_pylist(rows, schema=_MANIFEST_SCHEMA),
+                           f, compression="snappy")
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, os.path.join(self.manifest_dir, name))
 
     # -- execution ------------------------------------------------------
 
     def run(self, source: DataFrame,
             transform: Callable[[DataFrame], DataFrame]) -> dict:
-        """Process pending buckets in `waves` batches; returns run metrics.
+        """Process pending buckets in at most `waves` batches; returns run
+        metrics.
 
         Each wave filters the source to its buckets (predicate reaches the
-        scan), applies `transform`, writes partitioned by bucket."""
+        scan), applies `transform`, and writes partitioned by bucket."""
         run_id = uuid.uuid4().hex[:12]
         done = self.completed_buckets()
         pending = [b for b in range(self.n_buckets) if b not in done]
         bucketed = bucket_by(source, self.key, self.n_buckets)
         total_rows = 0
         t_all = time.time()
-        for w in range(0, len(pending), max(1, len(pending) // self.waves or 1)):
-            wave = pending[w: w + max(1, len(pending) // self.waves or 1)]
-            if not wave:
-                continue
+        step = max(1, -(-len(pending) // self.waves))  # ceil: ≤ `waves` waves
+        for w in range(0, len(pending), step):
+            wave = pending[w: w + step]
             t0 = time.time()
             part = bucketed.filter(F.col("bucket").isin(wave))
             out = transform(part)
@@ -85,23 +113,21 @@ class CheckpointedRun:
                 out = out.join(
                     bucketed.select(self.key, "bucket").distinct(), self.key
                 )
+            obs = Observation()
+            out = out.observe(obs, *[
+                F.count_if(F.col("bucket") == b).alias(f"n{b}") for b in wave])
             # per-write dynamic overwrite (only the wave's bucket partitions
             # are replaced) — set on the writer, NOT the shared session conf,
             # so unrelated writes in the session keep their own semantics
             (out.write.mode("overwrite")
              .option("partitionOverwriteMode", "dynamic")
              .partitionBy("bucket").parquet(self.data_dir))
-            per_bucket = {
-                r["bucket"]: r["n"]
-                for r in self.spark.read.parquet(self.data_dir)
-                .filter(F.col("bucket").isin(wave))
-                .groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect()
-            }
+            per_bucket = obs.get
             dt = time.time() - t0
             n = sum(per_bucket.values())
             self._record([
-                {"bucket": int(b), "n_rows": int(per_bucket.get(b, 0)),
-                 "seconds": dt, "rows_per_sec": n / dt if dt > 0 else 0.0,
+                {"bucket": b, "n_rows": per_bucket[f"n{b}"], "seconds": dt,
+                 "rows_per_sec": n / dt if dt > 0 else 0.0,
                  "run_id": run_id, "finished_at": time.time()}
                 for b in wave
             ])

@@ -47,6 +47,78 @@ def test_checkpoint_resume(spark, tmp_path):
     assert run3.read().select("doc_id").distinct().count() == 60
 
 
+
+def _manifest_files(run):
+    return sorted(f for f in os.listdir(run.manifest_dir)
+                  if f.startswith("part-") and f.endswith(".parquet"))
+
+
+def _last_job_id(spark) -> int:
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(),
+               default=-1)
+
+
+def test_checkpoint_waves_split_by_ceiling(spark, tmp_path):
+    """7 pending buckets with waves=4 run as 4 waves (2+2+2+1), one
+    manifest file each — rounding the wave size down made 7 waves."""
+    run = CheckpointedRun(spark, str(tmp_path / "ckpt"), n_buckets=7, waves=4)
+    m = run.run(sequences(spark, 40), lambda df: df.select("doc_id", "bucket"))
+    assert m["buckets_processed"] == 7 and m["rows"] == 40
+    assert len(_manifest_files(run)) == 4
+
+
+def test_checkpoint_manifest_lineage(spark, tmp_path):
+    """Manifest n_rows per bucket equals the rows written for that bucket,
+    including a bucket the transform empties (recorded as 0 and still
+    completed); reading and appending the manifest start no Spark job."""
+    import pyarrow.parquet as pq
+
+    run = CheckpointedRun(spark, str(tmp_path / "ckpt"), n_buckets=8, waves=3)
+    m = run.run(sequences(spark, 60),
+                lambda df: df.filter(F.col("bucket") != 3)
+                .select("doc_id", "bucket"))
+    man = pq.read_table(run.manifest_dir).to_pandas()
+    assert sorted(man["bucket"]) == list(range(8))
+    written = {r["bucket"]: r["count"]
+               for r in run.read().groupBy("bucket").count().collect()}
+    assert 3 not in written
+    assert dict(zip(man["bucket"], man["n_rows"])) == {
+        b: written.get(b, 0) for b in range(8)}
+    assert m["rows"] == sum(written.values()) == man["n_rows"].sum()
+
+    before = _last_job_id(spark)
+    assert run.completed_buckets() == set(range(8))
+    run._record([{"bucket": 9, "n_rows": 0, "seconds": 0.0,
+                  "rows_per_sec": 0.0, "run_id": "x", "finished_at": 0.0}])
+    assert run.completed_buckets() == set(range(8)) | {9}
+    assert _last_job_id(spark) == before
+    spark.range(1).count()  # the probe does see the session's jobs
+    assert _last_job_id(spark) > before
+
+
+def test_checkpoint_manifest_read_errors_raise(spark, tmp_path):
+    """No manifest (or no part file in it) means nothing done; a torn
+    manifest file raises instead of silently recomputing every bucket."""
+    import pyarrow as pa
+
+    run = CheckpointedRun(spark, str(tmp_path / "ckpt"), n_buckets=4)
+    assert run.completed_buckets() == set()
+    os.makedirs(run.manifest_dir)
+    open(os.path.join(run.manifest_dir, "_SUCCESS"), "w").close()
+    assert run.completed_buckets() == set()
+    run._record([{"bucket": b, "n_rows": 1, "seconds": 1.0,
+                  "rows_per_sec": 1.0, "run_id": "x", "finished_at": 0.0}
+                 for b in (0, 1)])
+    assert run.completed_buckets() == {0, 1}
+    (name,) = _manifest_files(run)
+    path = os.path.join(run.manifest_dir, name)
+    with open(path, "rb") as f:
+        data = f.read()
+    with open(path, "wb") as f:
+        f.write(data[: len(data) // 2])
+    with pytest.raises(pa.ArrowInvalid):
+        run.completed_buckets()
+
 def test_two_phase_count_matches_plain(spark):
     src = sequences(spark, 200)
     plain = {r["source"]: r["count"] for r in

@@ -46,7 +46,8 @@ def test_cli_extract_and_asof(spark, tmp_path, capsys):
     rc = cli.main(["asof", "--left", str(tmp_path / "l"), "--right", str(tmp_path / "r"),
                    "--on", "user_id", "--output", str(tmp_path / "j")])
     assert rc == 0
-    assert spark.read.parquet(str(tmp_path / "j")).count() == 210
+    info = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert info["rows"] == spark.read.parquet(str(tmp_path / "j")).count() == 210
 
 
 def test_gmm_and_bisecting(spark):

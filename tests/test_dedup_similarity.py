@@ -444,3 +444,39 @@ def test_release_caches_unpersists_intermediates(spark, planted_docs):
     release_caches(out)
     assert not any(c.storageLevel.useMemory for c in cached)
     release_caches(planted_docs)  # no handles attached: a clean no-op
+
+
+def test_shuffle_partitions_auto(spark, planted_docs, monkeypatch):
+    """A non-numeric spark.sql.shuffle.partitions ("auto" where AQE picks
+    the count) must not crash the two operators that size an explicit
+    repartition from it, nor change their results."""
+    from ifeatureomega_cli_spark.operators import dedup as D
+
+    monkeypatch.setattr(D, "_NGRAM_BCAST_MAX_DOCS", 0)  # the instance plan
+    rng = np.random.RandomState(3)
+    vecs = rng.normal(size=(150, 8))
+    emb = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>")
+
+    def run():
+        ngram = (D.ngram_jaccard_pairs(planted_docs, shingle_n=3, threshold=0.4)
+                 .select("id_a", "id_b", F.round("jaccard", 6).alias("j"))
+                 .sort("id_a", "id_b").collect())
+        tiles = (D.embedding_dup_pairs_exact(emb, threshold=0.2, block_size=37)
+                 .select("id_a", "id_b", F.round("cosine", 9).alias("c"))
+                 .sort("id_a", "id_b").collect())
+        return ngram, tiles
+
+    numeric = run()
+    conf_cls = type(spark.conf)
+    real_get = conf_cls.get
+    monkeypatch.setattr(
+        conf_cls, "get",
+        lambda self, key, *a: "auto" if key == "spark.sql.shuffle.partitions"
+        else real_get(self, key, *a))
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "auto"
+    auto = run()
+    assert len(numeric[0]) > 0 and len(numeric[1]) > 0
+    assert auto == numeric
+    assert D._shuffle_width(spark) == spark.sparkContext.defaultParallelism
