@@ -159,6 +159,9 @@ def cmd_analyze(args) -> int:
 
 def cmd_dedup(args) -> int:
     """Training-data dedup over a documents parquet."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     spark = _spark(args)
     from ifeatureomega_cli_spark.operators import dedup as D
 
@@ -174,9 +177,10 @@ def cmd_dedup(args) -> int:
         out = D.near_dedup(df, threshold=args.threshold)
     else:  # jaccard
         out = D.ngram_jaccard_pairs(df, threshold=args.threshold)
-    out.write.mode("overwrite").parquet(args.output)
-    print(json.dumps({"method": args.method,
-                      "rows": spark.read.parquet(args.output).count()}))
+    obs = Observation()
+    (out.observe(obs, F.count(F.lit(1)).alias("rows"))
+     .write.mode("overwrite").parquet(args.output))
+    print(json.dumps({"method": args.method, "rows": obs.get["rows"]}))
     return 0
 
 

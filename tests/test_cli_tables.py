@@ -62,7 +62,7 @@ def test_gmm_and_bisecting(spark):
     assert b.select("cluster").distinct().count() <= 3
 
 
-def test_cli_analyze_and_dedup(spark, tmp_path):
+def test_cli_analyze_and_dedup(spark, tmp_path, capsys):
     from ifeatureomega_cli_spark import cli
     from ifeatureomega_cli_spark.functions.extract import extract
 
@@ -92,6 +92,14 @@ def test_cli_analyze_and_dedup(spark, tmp_path):
     resolved = spark.read.parquet(str(tmp_path / "dr"))
     assert 0 < resolved.count() <= n_docs
     assert "text" in resolved.columns  # full rows survive, not just pairs
+
+    rc = cli.main(["dedup", "--input", docs_dir, "--method", "jaccard",
+                   "--threshold", "0.2", "--output", str(tmp_path / "dj")])
+    assert rc == 0
+    printed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    pairs = spark.read.parquet(str(tmp_path / "dj"))
+    assert printed["rows"] == pairs.count() > 0
+    assert pairs.filter("id_a >= id_b").count() == 0
 
 
 def test_cli_structure(spark, tmp_path):

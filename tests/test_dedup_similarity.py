@@ -391,21 +391,6 @@ def test_dedup_components_long_chain_log_rounds(spark):
     assert got.count() == n
 
 
-def test_ngram_jaccard_hashed_keys_match_string_keys(spark, planted_docs):
-    """hash_shingles=True (default, 8-byte shuffle keys) must produce the
-    identical pair set and jaccard values as the letter-exact string plan."""
-    from ifeatureomega_cli_spark.operators.dedup import ngram_jaccard_pairs
-
-    hashed = (ngram_jaccard_pairs(planted_docs, threshold=0.3)
-              .toPandas().sort_values(["id_a", "id_b"]).reset_index(drop=True))
-    strings = (ngram_jaccard_pairs(planted_docs, threshold=0.3,
-                                   hash_shingles=False)
-               .toPandas().sort_values(["id_a", "id_b"]).reset_index(drop=True))
-    assert hashed[["id_a", "id_b"]].equals(strings[["id_a", "id_b"]])
-    assert np.allclose(hashed["jaccard"], strings["jaccard"], rtol=0)
-    assert len(hashed) > 0
-
-
 def test_simhash_bucket_cap_degenerate(spark):
     """Batch simhash skew guard (round 5, symmetric with minhash): many
     identical texts share simhash and every band key; the cap drops the
