@@ -12,8 +12,8 @@ From-scratch engine with the descriptor capabilities of iFeatureOmega-CLI
   lag/lead, sessionize — as pure DataFrame combinators;
 * training-data pipeline operators: dedup (exact / MinHash-LSH / SimHash /
   n-gram Jaccard / embedding-cosine, plus connected-component keeper
-  resolution over the candidate pairs), ANN similarity search, text
-  quality stats, multimodal column plumbing.
+  resolution over the candidate pairs), ANN similarity search and text
+  quality stats.
 """
 
 from ifeatureomega_cli_spark.session import get_spark

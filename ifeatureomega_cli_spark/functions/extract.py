@@ -1,7 +1,7 @@
 """`extract` — the engine's main descriptor entry point.
 
 ``extract(df, "protein:AAC")`` appends a ``features array<double>`` column
-computed by one Arrow-vectorized pandas UDF.  The plan stays fully
+computed by one Arrow-native UDF.  The plan stays fully
 declarative: Catalyst prunes the scan to (doc_id, tokens) and the only
 Python boundary is one ArrowEvalPython node streaming ~2048-row batches.
 
@@ -14,11 +14,9 @@ agg run map-side-combined (it reduces to one long per partition).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType
 
 from ifeatureomega_cli_spark.functions.kernels import Ragged
@@ -128,38 +126,26 @@ def extract_many(
     tokens_col: str = "tokens",
     length: int | None = None,
     dtype: str = "float64",
-    fuse: bool = True,
 ) -> DataFrame:
     """Several descriptors in one pass, one output column per descriptor.
 
-    fuse=True (default): ONE struct-returning Arrow UDF computes every
-    descriptor per batch — the Ragged batch structure (a Python-loop
-    int64 flatten of the tokens column) is built ONCE instead of once per
-    descriptor, and the tokens column crosses the Arrow boundary once.
-    With 10 descriptors that removes 9 redundant flatten passes — the
-    dominant per-batch memory traffic besides the kernels themselves.
-    fuse=False keeps the one-UDF-per-descriptor plan (Catalyst still
-    merges them into a single ArrowEvalPython node; each UDF rebuilds the
-    Ragged) — retained for A/B measurement and single-descriptor parity
-    with `extract`."""
+    ONE struct-returning Arrow UDF computes every descriptor per batch:
+    the tokens column crosses the Arrow boundary once and the Ragged batch
+    structure is built once and shared by all kernels, instead of once per
+    descriptor.  Each struct field is then projected out as its own
+    column, named by the descriptor without its namespace prefix.  The
+    values are bit-identical to one `descriptor_udf` column per name."""
     if not names:
         return df
     out_names = _out_names(names)  # refuse collisions before any job runs
     L = length or 0
     if not L and any(get_spec(n).equal_length for n in names):
         L = _discover_length(df, "n_tok")  # ONE agg job shared by all
-    if fuse:
-        udf = fused_struct_udf(names, params, L, dtype=dtype)
-        packed = df.withColumn("__feats", udf(F.col(tokens_col)))
-        cols = [F.col(c) for c in df.columns] + [
-            F.col(f"__feats.{o}").alias(o) for o in out_names]
-        return packed.select(*cols)
-    cols: list[Column] = [F.col(c) for c in df.columns]
-    for name, out in zip(names, out_names):
-        p = (params or {}).get(name)
-        cols.append(descriptor_udf(name, p, L, dtype=dtype)(
-            F.col(tokens_col)).alias(out))
-    return df.select(*cols)
+    udf = fused_struct_udf(names, params, L, dtype=dtype)
+    packed = df.withColumn("__feats", udf(F.col(tokens_col)))
+    cols = [F.col(c) for c in df.columns] + [
+        F.col(f"__feats.{o}").alias(o) for o in out_names]
+    return packed.select(*cols)
 
 
 def fused_struct_udf(names: list[str], params: dict[str, dict] | None = None,
@@ -185,52 +171,3 @@ def fused_struct_udf(names: list[str], params: dict[str, dict] | None = None,
 
     return _udf
 
-
-def fused_udf(names: list[str], params: dict[str, dict] | None = None,
-              length: int = 0):
-    """ONE Arrow UDF computing several descriptors per batch: the Ragged
-    batch structure is built once and shared, and the output crosses the
-    Python→JVM boundary as a single concatenated array column (one Arrow
-    child array instead of one per descriptor)."""
-    kerns = [get_spec(n).kernel((params or {}).get(n), length) for n in names]
-
-    @pandas_udf(ArrayType(DoubleType()))
-    def _udf(tokens: pd.Series) -> pd.Series:
-        r = Ragged.from_arrays(tokens.to_numpy())
-        out = np.concatenate([k(r) for k in kerns], axis=1)
-        return pd.Series(list(out))
-
-    return _udf
-
-
-def extract_fused(
-    df: DataFrame,
-    names: list[str],
-    params: dict[str, dict] | None = None,
-    tokens_col: str = "tokens",
-    out_col: str = "features",
-    length: int | None = None,
-) -> DataFrame:
-    """Fused multi-descriptor extraction → one `out_col array<double>`.
-
-    Use `fused_slices(names, ...)` to recover per-descriptor sub-vectors
-    (JVM-side `slice`, no extra Python pass)."""
-    L = length or 0
-    if not L and any(get_spec(n).equal_length for n in names):
-        L = _discover_length(df, "n_tok")
-    udf = fused_udf(names, params, L)
-    return df.withColumn(out_col, udf(F.col(tokens_col)))
-
-
-def fused_slices(names: list[str], params: dict[str, dict] | None = None,
-                 length: int = 0, out_col: str = "features") -> list[Column]:
-    """Column expressions slicing a fused vector back into per-descriptor
-    arrays, aliased by descriptor name."""
-    cols = []
-    start = 1
-    for n in names:
-        dim = len(get_spec(n).names((params or {}).get(n), length))
-        cols.append(F.slice(F.col(out_col), start, dim).alias(
-            n.split(":", 1)[-1].replace(" ", "_")))
-        start += dim
-    return cols

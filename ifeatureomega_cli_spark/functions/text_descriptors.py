@@ -37,40 +37,29 @@ for _i, _c in enumerate(PROTEIN_AA):
 
 
 def _tokens_from_strings(arr) -> Ragged:
-    """Arrow StringArray → gap-filtered protein-token Ragged, vectorized."""
-    import pyarrow as pa
-
+    """Arrow string/large_string array → gap-filtered protein-token Ragged,
+    vectorized: one LUT gather over the flat UTF-8 buffer, row ids from
+    the raw offset spans.  A null row has zero tokens; its slot may still
+    span bytes (Arrow allows it), so nulls are masked by row, not by
+    zeroed lengths."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
-    if pa.types.is_large_string(arr.type):
-        arr = arr.cast(pa.string())
     n = len(arr)
-    # StringArray exposes no .offsets property — read the int32 offsets
-    # buffer directly (window it by arr.offset for sliced arrays)
-    offsets = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
+    if n == 0:  # an empty array may carry no offsets buffer at all
+        return Ragged(np.empty(0, np.int64), np.zeros(0, np.int64))
+    # StringArray exposes no .offsets property — read the offsets buffer
+    # directly (window it by arr.offset for sliced arrays)
+    off_dtype = np.int64 if pa.types.is_large_string(arr.type) else np.int32
+    offsets = np.frombuffer(arr.buffers()[1], dtype=off_dtype)[
         arr.offset:arr.offset + n + 1]
-    char_lens = np.diff(offsets)
-    if arr.null_count:
-        char_lens = np.where(
-            arr.is_valid().to_numpy(zero_copy_only=False), char_lens, 0)
-        ids_rows = []
-        data = np.frombuffer(arr.buffers()[2], dtype=np.uint8) \
-            if arr.buffers()[2] is not None else np.empty(0, np.uint8)
-        for s, ln in zip(offsets[:-1], char_lens):
-            b = data[s:s + ln]
-            t = _LUT256[b]
-            ids_rows.append(t[t >= 0])
-        lengths = np.array([len(x) for x in ids_rows], dtype=np.int64)
-        flat = (np.concatenate(ids_rows).astype(np.int64)
-                if ids_rows else np.empty(0, np.int64))
-        return Ragged(flat, lengths)
     buf = arr.buffers()[2]
     data = (np.frombuffer(buf, dtype=np.uint8) if buf is not None
             else np.empty(0, np.uint8))
-    flat_bytes = data[offsets[0]:offsets[-1]]
-    ids = _LUT256[flat_bytes]
-    rid = np.repeat(np.arange(n), char_lens)
+    ids = _LUT256[data[offsets[0]:offsets[-1]]]
+    rid = np.repeat(np.arange(n), np.diff(offsets))
     keep = ids >= 0
+    if arr.null_count:
+        keep &= arr.is_valid().to_numpy(zero_copy_only=False)[rid]
     lengths = np.bincount(rid[keep], minlength=n).astype(np.int64)
     return Ragged(ids[keep].astype(np.int64), lengths)
 

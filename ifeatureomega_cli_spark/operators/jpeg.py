@@ -1,8 +1,7 @@
 """Pure-numpy JPEG (JFIF) codec — no libjpeg.
 
-Round 6 removed the JPEG entry from the multimodal stub list (baseline
-sequential DCT); round 7 adds the PROGRESSIVE (SOF2) decoder — spectral
-selection, successive approximation (DC and AC first + refinement
+Round 6 added the baseline sequential DCT codec; round 7 adds the
+PROGRESSIVE (SOF2) decoder — spectral selection, successive approximation (DC and AC first + refinement
 scans, shared EOB runs, per T.81 Annex G.2) — validated against every
 real progressive JPEG shipped in this container (nodejs docs, Spark's
 mllib grayscale sample, the rust embedded-book photo) plus an exact

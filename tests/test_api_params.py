@@ -120,20 +120,6 @@ def test_dna_param_variant_matches_reference(spark, desc, params):
     assert np.allclose(got, exp, rtol=1e-9, atol=1e-12, equal_nan=True)
 
 
-def test_extract_fused_equals_separate(spark):
-    from ifeatureomega_cli_spark.functions.extract import (
-        extract_fused, extract_many, fused_slices)
-
-    names = ["protein:AAC", "protein:GAAC", "protein:CTDT"]
-    sdf = spark.read.parquet(os.path.join(FIXDIR, "peptide_tokens.parquet")).limit(50)
-    a = extract_many(sdf, names).select("doc_id", "AAC", "GAAC", "CTDT")\
-        .toPandas().set_index("doc_id")
-    b = extract_fused(sdf, names).select("doc_id", *fused_slices(names))\
-        .toPandas().set_index("doc_id").loc[a.index]
-    for c in ("AAC", "GAAC", "CTDT"):
-        assert np.allclose(np.array(a[c].tolist()), np.array(b[c].tolist()))
-
-
 RNA_VARIANTS = [
     ("Kmer type 1", {"kmer": 4}),
     ("PseDNC", {"lambdaValue": 2, "weight": 0.1,
@@ -177,11 +163,14 @@ def test_extract_float32_output(spark):
 
 
 def test_extract_many_struct_fuse_bit_identical(spark):
-    """The round-4 default (one struct-returning Arrow UDF, shared Ragged)
-    must be BIT-identical to the per-descriptor UDF path across the
-    kernel archetypes — composition, gapped pairs, autocorrelation,
+    """extract_many's one struct-returning Arrow UDF (shared Ragged) must
+    be BIT-identical to one `descriptor_udf` column per descriptor across
+    the kernel archetypes — composition, gapped pairs, autocorrelation,
     CTD, pseudo-composition, positional (equal-length), cross-alphabet."""
-    from ifeatureomega_cli_spark.functions.extract import extract_many
+    from pyspark.sql import functions as F
+
+    from ifeatureomega_cli_spark.functions.extract import (
+        _discover_length, descriptor_udf, extract_many)
 
     names = ["protein:AAC", "protein:DPC type 1", "protein:CKSAAP type 1",
              "protein:GAAC", "protein:CKSAAGP type 1", "protein:Moran",
@@ -191,9 +180,12 @@ def test_extract_many_struct_fuse_bit_identical(spark):
     outs = [n.split(":", 1)[-1].replace(" ", "_") for n in names]
     sdf = spark.read.parquet(
         os.path.join(FIXDIR, "peptide_tokens.parquet")).limit(60)
-    a = (extract_many(sdf, names, fuse=True).select("doc_id", *outs)
+    L = _discover_length(sdf, "n_tok")
+    a = (extract_many(sdf, names).select("doc_id", *outs)
          .toPandas().set_index("doc_id").sort_index())
-    b = (extract_many(sdf, names, fuse=False).select("doc_id", *outs)
+    b = (sdf.select("doc_id", *[
+            descriptor_udf(n, None, L)(F.col("tokens")).alias(o)
+            for n, o in zip(names, outs)])
          .toPandas().set_index("doc_id").sort_index())
     for c in outs:
         av = np.array(a[c].tolist())

@@ -206,23 +206,29 @@ def test_ivf_recall_on_sorted_corpus(spark, tmp_path):
 
 def test_ivf_topk_distributed_matches_broadcast(spark):
     """Forcing the no-driver-collect query path (max_broadcast_queries=0)
-    must reproduce the broadcast kernel's pairs exactly."""
+    must reproduce the broadcast kernel's pairs exactly — and so must both
+    sides of the cap boundary: n_q − 1 runs the distributed path, n_q and
+    n_q + 1 the broadcast kernel."""
     from ifeatureomega_cli_spark.operators.similarity import (
         ivf_assign, ivf_topk, train_ivf_centroids)
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding")
+    n_q = queries.count()
     cents = train_ivf_centroids(emb, n_cells=8)
     corpus = ivf_assign(emb, cents)
     bc = (ivf_topk(corpus, queries, cents, k=10, n_probe=3)
           .toPandas().sort_values(["query_id", "rk"]).reset_index(drop=True))
-    dist = (ivf_topk(corpus, queries, cents, k=10, n_probe=3,
-                     max_broadcast_queries=0)
-            .toPandas().sort_values(["query_id", "rk"]).reset_index(drop=True))
-    assert bc[["query_id", "vec_id", "rk"]].equals(
-        dist[["query_id", "vec_id", "rk"]])
-    assert np.allclose(bc["cosine"], dist["cosine"], rtol=1e-12)
+    assert len(bc) > 0
+    for cap in (0, n_q - 1, n_q, n_q + 1):
+        dist = (ivf_topk(corpus, queries, cents, k=10, n_probe=3,
+                         max_broadcast_queries=cap)
+                .toPandas().sort_values(["query_id", "rk"])
+                .reset_index(drop=True))
+        assert bc[["query_id", "vec_id", "rk"]].equals(
+            dist[["query_id", "vec_id", "rk"]]), cap
+        assert np.allclose(bc["cosine"], dist["cosine"], rtol=1e-12), cap
 
 
 def test_ivf_topk_distributed_no_driver_collect(spark, monkeypatch):

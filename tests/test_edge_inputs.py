@@ -142,6 +142,33 @@ def test_knn_distributed_zero_candidate_query_gets_zero_votes(spark):
     assert all(v == 0.0 for v in d)
 
 
+def test_knn_broadcast_cap_boundary_same_rows(spark):
+    """max_broadcast_train at n_train − 1 dispatches to the distributed
+    twin, at n_train and n_train + 1 to the broadcast kernel: all three
+    must return the same feature rows bit for bit."""
+    from ifeatureomega_cli_spark.operators.crosssample import knn_features
+
+    rng = np.random.RandomState(5)
+    n_train, L = 60, 8
+    rows = [(f"s{i}", rng.randint(0, 20, size=L).tolist(), str(i % 3),
+             "training" if i < n_train else "testing")
+            for i in range(n_train + 12)]
+    df = spark.createDataFrame(
+        rows, "doc_id string, tokens array<int>, label string, purpose string")
+    got = {}
+    for cap in (n_train - 1, n_train, n_train + 1):
+        pdf = (knn_features(df, "protein", max_broadcast_train=cap)
+               .select("doc_id", "features").toPandas()
+               .sort_values("doc_id"))
+        got[cap] = (pdf["doc_id"].tolist(),
+                    np.array(pdf["features"].tolist()))
+    ids, ref = got[n_train]
+    assert len(ids) == n_train + 12 and ref.shape[1] > 0
+    for cap in (n_train - 1, n_train + 1):
+        assert got[cap][0] == ids
+        assert np.array_equal(got[cap][1], ref), cap
+
+
 def test_salt_id_cols_spreads_duplicates(spark):
     """Content-hash salting collapses identical rows; id_cols restores the
     spread (and stays retry-deterministic)."""
@@ -160,16 +187,15 @@ def test_salt_id_cols_spreads_duplicates(spark):
 def test_extract_many_duplicate_out_names_rejected(spark):
     """ADVICE r4: 'protein:AAC' and 'dna:AAC' both normalize to column
     'AAC'; the fused struct would silently keep only the last kernel's
-    values.  Both the fused and per-UDF paths must refuse up front."""
+    values.  extract_many must refuse up front."""
     import pytest
 
     from ifeatureomega_cli_spark.functions.extract import extract_many
 
     df = spark.createDataFrame([(0, ["A", "C"], 2)],
                                "doc_id long, tokens array<string>, n_tok int")
-    for fuse in (True, False):
-        with pytest.raises(ValueError, match="duplicate output column"):
-            extract_many(df, ["protein:ASDC", "dna:ASDC"], fuse=fuse)
+    with pytest.raises(ValueError, match="duplicate output column"):
+        extract_many(df, ["protein:ASDC", "dna:ASDC"])
     # distinct normalized names still fine
     out = extract_many(df, ["protein:AAC", "protein:GAAC"])
     assert {"AAC", "GAAC"} <= set(out.columns)

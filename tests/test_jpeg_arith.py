@@ -117,8 +117,6 @@ def test_progressive_arith_matches_huffman_progressive():
     payload = open(os.path.join(FIXDIR, "prog420_q85.jpg"), "rb").read()
     img = decode_jpeg(payload)
     assert img.shape == (28, 40, 3)
-    from ifeatureomega_cli_spark.operators.multimodal import decode_media
-    assert decode_media(payload)[0] == "jpeg"
 
 
 def test_differential_sof_honest_boundary():
@@ -148,13 +146,6 @@ def test_truncated_arith_stream_raises():
     assert img.shape == (28, 40, 3)
 
 
-def test_decode_media_dispatches_arith():
-    from ifeatureomega_cli_spark.operators.multimodal import decode_media
-    payload = open(os.path.join(FIXDIR, "seq420_q75.jpg"), "rb").read()
-    path, feat = decode_media(payload)
-    assert path == "jpeg" and len(feat) == 17
-
-
 # ------------------------------------------ 12-bit extended sequential
 
 def test_12bit_roundtrip_gray_and_rgb():
@@ -179,14 +170,6 @@ def test_12bit_magnitudes_exceed_8bit_categories():
     assert got.shape == (16, 16, 1)
     # extreme blocks survive with bounded quantization error
     assert np.abs(got[:, :, 0].astype(int) - img.astype(int)).mean() < 600
-
-
-def test_12bit_media_dispatch_scales_to_uint8():
-    from ifeatureomega_cli_spark.operators.multimodal import decode_media
-    img = np.full((16, 16), 2048, dtype=np.uint16)
-    path, feat = decode_media(encode_jpeg(img, bits=12))
-    assert path == "jpeg" and len(feat) == 17
-    assert 120 <= feat[3] <= 136      # mean scaled into 8-bit range
 
 
 def test_8bit_encoder_rejects_bad_precision():

@@ -105,25 +105,6 @@ def test_roundtrip_property():
     prop()
 
 
-def test_media_dispatch_jpeg(spark):
-    from ifeatureomega_cli_spark.operators.multimodal import (
-        decode_media, extract_media_features, image_features,
-        synthesize_media)
-
-    img = _smooth(12, 20, seed=3)
-    path, feat = decode_media(encode_jpeg(img))
-    assert path == "jpeg" and len(feat) == 17
-    # feature values computed on the DECODED pixels
-    np.testing.assert_allclose(feat, image_features(decode_jpeg(
-        encode_jpeg(img))))
-    # truncated → stub fallback, not a crash or silent partial decode
-    assert decode_media(encode_jpeg(img)[:30])[0] == "stub"
-    out = extract_media_features(synthesize_media(spark, n=36),
-                                 out_dim=8).toPandas()
-    assert set(out[out.kind == "image"]["decode_path"]) == \
-        {"bmp", "png", "jpeg", "gif"}
-
-
 # ------------------------------------------------- progressive (round 7)
 
 def test_progressive_differential_exact():
@@ -186,15 +167,3 @@ def test_progressive_real_photo_4_2_0():
     assert img.shape == (477, 720, 3)
     # a real photo: all three channels carry structure
     assert all(img[:, :, c].std() > 20 for c in range(3))
-
-
-def test_progressive_media_dispatch(spark):
-    """The multimodal auto-dispatcher now takes the REAL path for
-    progressive payloads (no stub fallback)."""
-    from ifeatureomega_cli_spark.operators.jpeg import (
-        encode_jpeg_progressive)
-    from ifeatureomega_cli_spark.operators.multimodal import decode_media
-
-    img = _smooth(24, 16, seed=3)
-    kind, feats = decode_media(encode_jpeg_progressive(img), 16)
-    assert kind == "jpeg"

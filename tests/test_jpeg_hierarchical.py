@@ -140,16 +140,3 @@ def test_truncated_hierarchy_rejected():
     cut = payload.index(b"\xff\xdf")
     with pytest.raises(ValueError, match="ended"):
         decode_jpeg(payload[:cut] + b"\xff\xd9")
-
-
-# -------------------------------------------------------------- dispatch
-
-def test_media_dispatch_hierarchical(spark):
-    from ifeatureomega_cli_spark.operators.multimodal import decode_media
-
-    rng = np.random.default_rng(11)
-    img = rng.integers(0, 256, size=(16, 16), dtype=np.uint16)
-    payload = encode_jpeg_hierarchical(img, levels=2, lossless=True,
-                                       bits=8)
-    kind, feats = decode_media(payload, 16)
-    assert kind == "jpeg"

@@ -153,17 +153,6 @@ def test_single_row_and_single_column():
         np.testing.assert_array_equal(out[:, :, 0].astype(np.int64), img)
 
 
-# --------------------------------------------------------------- dispatch
-
-def test_media_dispatch_lossless(spark):
-    from ifeatureomega_cli_spark.operators.multimodal import decode_media
-
-    rng = np.random.default_rng(9)
-    img = rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint16)
-    kind, feats = decode_media(encode_jpeg_lossless(img, bits=8), 16)
-    assert kind == "jpeg"
-
-
 def test_hierarchical_still_rejected():
     d = bytearray(_hand_stream())
     i = d.index(b"\xff\xc3")

@@ -98,32 +98,6 @@ def test_sinks(spark, tmp_path):
     assert sum(1 for line in arff if line and not line.startswith("@")) == 300
 
 
-def test_multimodal_pipeline_dispatch(spark):
-    """Real decode paths for wav/bmp/png/avi payloads, stub fallback for
-    opaque (fake-codec video) bytes — all through one mapInPandas
-    pipeline."""
-    from ifeatureomega_cli_spark.operators.multimodal import (
-        extract_media_features, synthesize_media)
-
-    media = synthesize_media(spark, n=32)
-    out = extract_media_features(media, out_dim=8).toPandas()
-    assert len(out) == 32
-    by_kind = out.groupby("kind")["decode_path"].unique().to_dict()
-    assert sorted(by_kind["image"]) == ["bmp", "gif", "jpeg", "png"]
-    # round 7: all four real image containers rotate in synthesize_media
-    assert list(by_kind["audio"]) == ["wav"]
-    assert sorted(by_kind["video"]) == ["avi", "stub"]  # round 7: MJPEG +
-    # raw-DIB AVI rows decode for real; the fake-codec third still stubs
-    widths = {"bmp": 17, "png": 17, "jpeg": 17, "gif": 17, "wav": 4,
-              "stub": 8, "avi": 21}
-    assert all(len(f) == widths[p]
-               for p, f in zip(out["decode_path"], out["feature"]))
-    # deterministic: same payload → same digest/feature
-    out2 = extract_media_features(synthesize_media(spark, n=32), out_dim=8).toPandas()
-    assert (out.sort_values("media_id")["digest"].to_numpy()
-            == out2.sort_values("media_id")["digest"].to_numpy()).all()
-
-
 def test_analysis_facade_workflow(spark):
     """The reference's documented iAnalysis workflow, Spark-side
     (ref iFeatureOmegaCLI.py:9951-10000 docstring examples)."""
