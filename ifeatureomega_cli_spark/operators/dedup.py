@@ -4,14 +4,16 @@ All operators are pure DataFrame pipelines designed for the 100 TB case:
 
 * exact: one hash-shuffle on the digest — the minimum possible work;
 * minhash LSH: shingle → minhash signature (one Arrow-vectorized UDF) →
-  band buckets → bucket join restricted to same-bucket candidates (no n²);
-* simhash: 64-bit signature, banded for candidate generation;
+  band buckets → one grouped pass per bucket that emits its in-bucket
+  pairs with their signatures and verifies them (no n², no join);
+* simhash: 64-bit signature, banded into the same grouped bucket pass;
 * n-gram Jaccard: exact, over one persisted table of per-doc distinct
   shingle-hash arrays; a size dispatch picks a broadcast inverted-index
   kernel (bounded corpora — no pair exchange at all) or a shingle-keyed
   groupBy + vectorized pair expansion (only docs sharing ≥1 shingle ever
   meet), and both return the same pairs;
-* embedding cosine: random-hyperplane LSH buckets then in-bucket verify.
+* embedding cosine: random-hyperplane LSH buckets through the same
+  grouped bucket pass, cosine verified in-bucket.
 
 Every candidate-pair generator keys its shuffle on the bucket id, so skewed
 buckets (stop-shingle floods) are capped via `max_bucket_size`.
@@ -37,6 +39,10 @@ _MERSENNE = (1 << 61) - 1
 # distributed instance plan.  Module-level so tests can force either path.
 _NGRAM_BCAST_MAX_DOCS = 200_000
 _NGRAM_BCAST_MAX_INST = 8_000_000
+
+# minhash bucket cap: a (band, bucket) group with more rows is a
+# stop-shingle flood and is dropped (the DuckDB oracles' HAVING COUNT(*))
+_MINHASH_MAX_BUCKET = 200
 
 # multiply-xor mixing constants (splitmix64 / xxhash finalizer family) for
 # combining per-word hashes into position-sensitive shingle hashes
@@ -205,16 +211,15 @@ def _check_bands(n_hashes: int, bands: int) -> None:
 def release_caches(result: DataFrame) -> None:
     """Unpersist what a dedup operator cached for its result.
 
-    minhash_dedup / simhash_dup_pairs / embedding_dup_pairs cache their
-    signature / bucket tables (reused across the guard groupBy, the anti
-    join and both self-join aliases); ngram_jaccard_pairs persists its
-    per-doc shingle table and, on its broadcast plan, also holds the
-    broadcast inverted index.  Every result still reads these when it
-    runs (ngram_jaccard_pairs runs some jobs eagerly at call time, but its
-    pairs are computed lazily), so the operator cannot release them —
-    the caller owns their lifetime: materialize the result, then call
-    release_caches(result).  Skipping this leaks storage (caches are
-    LRU-evictable, MEMORY_AND_DISK), not correctness."""
+    ngram_jaccard_pairs persists its per-doc shingle table and, on its
+    broadcast plan, also holds the broadcast inverted index.  Its result
+    still reads these when it runs (the operator runs some jobs eagerly at
+    call time, but its pairs are computed lazily), so the operator cannot
+    release them — the caller owns their lifetime: materialize the result,
+    then call release_caches(result).  Skipping this leaks storage (caches
+    are LRU-evictable, MEMORY_AND_DISK), not correctness.  The other dedup
+    results hold nothing, so the call is a no-op on them; callers that
+    take any dedup result can call it unconditionally."""
     for cached in getattr(result, "_dedup_caches", ()):
         cached.unpersist()
 
@@ -351,39 +356,56 @@ def minhash_band_expr(bands: int, n_hashes: int | None = None):
     ).alias("band", "bucket")
 
 
+def _bucket_pairs(
+    rows: DataFrame, id_col: str, keys: list[str], sig_col: str,
+    max_bucket_size: int, score=None,
+) -> DataFrame:
+    """(id_a, id_b[, score]) once for every pair of rows sharing a bucket.
+
+    One grouped pass on one `keys`-hashed shuffle: a windowed row count
+    drops the rows of buckets holding one row or over `max_bucket_size`
+    rows (stop-shingle floods, degenerate vectors) before anything is
+    collected, so no oversized bucket is built as one array; each kept
+    bucket collects its (id, sig) rows, and the JVM emits every pair in it
+    once (posexplode + slice), ordered id_a < id_b, equal or null ids
+    dropped.  `score(sig_a, sig_b)` returns an aliased Column.
+
+    A pair sharing several buckets is emitted by each, so the final dedupe
+    stays: "emit only at the first shared bucket" is not exact, because
+    that bucket can be an oversized, dropped one.  The dedupe keys on the
+    ids alone, so the score is an aggregate value: a caller's filter on it
+    stays above the dedupe instead of being pushed below and evaluating a
+    Python-UDF score twice."""
+    rec = F.struct(F.col(id_col).alias("id"), F.col(sig_col).alias("sig"))
+    n, size = F.size("m"), F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    groups = (rows.withColumn("_n", size)
+              .where(F.col("_n").between(2, max_bucket_size))
+              .groupBy(*keys).agg(F.collect_list(rec).alias("m")))
+    x, y = F.col("x"), F.col("y")
+    x_lo = x["id"] < y["id"]
+    pairs = (groups.select("m", F.posexplode("m").alias("i", "x"))
+             .select("x", F.explode(F.slice("m", F.col("i") + 2, n)).alias("y"))
+             .select(F.when(x_lo, x).otherwise(y).alias("a"),
+                     F.when(x_lo, y).otherwise(x).alias("b"))
+             .where(F.col("a.id") < F.col("b.id")))
+    out = [F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")]
+    if score is not None:
+        out.append(score(F.col("a.sig"), F.col("b.sig")))
+    return pairs.select(*out).dropDuplicates(["id_a", "id_b"])
+
+
 def minhash_lsh_candidates(
     sigs: DataFrame,
     id_col: str = "doc_id",
     bands: int = 16,
-    max_bucket_size: int = 200,
+    max_bucket_size: int = _MINHASH_MAX_BUCKET,
 ) -> DataFrame:
-    """Candidate pairs from banded minhash signatures.
-
-    Buckets bigger than `max_bucket_size` are dropped (stop-shingle floods —
-    the skew guard that keeps the bucket join from exploding at scale)."""
-    rows = sigs.select(id_col, minhash_band_expr(bands))
-    # drop oversized buckets (stop-shingle floods).  Only the OVER-limit set
-    # is guaranteed small, so broadcast that side as an anti join — the
-    # kept-buckets table grows with the corpus and must never be broadcast.
-    oversized = rows.groupBy("band", "bucket").count().filter(
-        F.col("count") > max_bucket_size
-    )
-    rows = rows.join(F.broadcast(oversized.select("band", "bucket")),
-                     ["band", "bucket"], "left_anti")
-    left = rows.alias("l")
-    right = rows.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col(f"l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
+    """Candidate pairs (id_a, id_b) from banded minhash signatures: the
+    pairs minhash_dedup verifies.  (band, bucket) groups over
+    `max_bucket_size` rows are dropped (stop-shingle floods)."""
+    rows = sigs.select(id_col, "sig", minhash_band_expr(bands))
+    return _bucket_pairs(rows, id_col, ["band", "bucket"], "sig",
+                         max_bucket_size)
 
 
 def minhash_dedup(
@@ -401,41 +423,30 @@ def minhash_dedup(
 
     sig agreement fraction estimates Jaccard; verification stays on the
     signatures (cheap) — swap in ngram_jaccard_pairs for exact verify.
+    Candidates are minhash_lsh_candidates' pairs; each bucket row carries
+    its signature, so the verify needs no join back.
 
     The agreement count stays the interpreted F.zip_with/F.filter
     expression DELIBERATELY (round-6 A/B, BENCH/BASELINE.md §verify-ab):
     at 1M candidate pairs the JVM-side equality-count runs ~1.7× FASTER
-    than an Arrow pandas UDF over the joined (sig_a, sig_b) arrays —
+    than an Arrow pandas UDF over the (sig_a, sig_b) arrays —
     integer equality over 64 elements is cheap enough that the UDF's
     Arrow transfer of two 512 B arrays per pair dominates.  The
     embedding twin's opposite finding (~100× for _pair_cos,
     dedup.py) is about F.aggregate float multiply-accumulate chains,
-    a much heavier per-element expression class.
-
-    Caches the signatures table; the caller owns the lifetime — see
-    release_caches()."""
+    a much heavier per-element expression class."""
     _check_bands(n_hashes, bands)
     sigs = minhash_signatures(df, text_col, id_col, n_hashes, shingle_n,
-                              seed, digest).cache()
-    cands = minhash_lsh_candidates(sigs, id_col, bands)
-    a = sigs.alias("a")
-    b = sigs.alias("b")
-    joined = (
-        cands.join(a, cands.id_a == F.col(f"a.{id_col}"))
-        .join(b, cands.id_b == F.col(f"b.{id_col}"))
-        .select(
-            "id_a", "id_b",
-            (
-                F.size(F.filter(
-                    F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y),
-                    lambda m: m,
-                )) / F.size(F.col("a.sig"))
-            ).alias("est_jaccard"),
-        )
-    )
-    result = joined.filter(F.col("est_jaccard") >= threshold)
-    result._dedup_caches = (sigs,)
-    return result
+                              seed, digest)
+
+    def agreement(a, b):
+        same = F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda m: m)
+        return (F.size(same) / F.size(a)).alias("est_jaccard")
+
+    rows = sigs.select(id_col, "sig", minhash_band_expr(bands))
+    return _bucket_pairs(rows, id_col, ["band", "bucket"], "sig",
+                         _MINHASH_MAX_BUCKET, agreement
+                         ).where(F.col("est_jaccard") >= threshold)
 
 
 def ngram_jaccard_pairs(
@@ -906,34 +917,16 @@ def simhash_dup_pairs(
     distance in-bucket.
 
     Same skew guard as the minhash twin (round 5): a (band, key) group
-    over `max_bucket_size` is dropped via a broadcast anti join of the
-    small over-limit side — thousands of empty/boilerplate docs share
-    simhash 0 and would otherwise self-join O(bucket²) on one hot key.
-
-    Caches the signatures table; the caller owns the lifetime — see
-    release_caches()."""
+    over `max_bucket_size` rows is dropped before it is collected —
+    thousands of empty/boilerplate docs share simhash 0 and would otherwise
+    emit O(bucket²) pairs on one hot key."""
     _check_digest(digest)
-    sigs = simhash_signatures(df, text_col, id_col, shingle_n, digest).cache()
-    banded = sigs.select(id_col, "simhash", simhash_band_expr(digest))
-    oversized = (banded.groupBy("band", "key").count()
-                 .filter(F.col("count") > max_bucket_size))
-    banded = banded.join(F.broadcast(oversized.select("band", "key")),
-                         ["band", "key"], "left_anti")
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"),
-                F.col("a.simhash").alias("sig_a"), F.col("b.simhash").alias("sig_b"))
-        .distinct()
-    )
-    result = (
-        cand.withColumn("hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-    result._dedup_caches = (sigs,)
-    return result
+    sigs = simhash_signatures(df, text_col, id_col, shingle_n, digest)
+    rows = sigs.select(id_col, "simhash", simhash_band_expr(digest))
+    return _bucket_pairs(
+        rows, id_col, ["band", "key"], "simhash", max_bucket_size,
+        lambda a, b: F.bit_count(a.bitwiseXOR(b)).alias("hamming"),
+    ).where(F.col("hamming") <= max_hamming)
 
 
 def _component_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
@@ -1141,22 +1134,19 @@ def embedding_dup_pairs(
     `n_planes` signs → one bucket key per table; a pair is a candidate if
     it collides in ANY table (the standard multi-table recall boost — the
     per-true-pair miss probability drops from p to p^n_tables); exact
-    cosine verifies in one Arrow pass.  Tables share one
-    (table, bucket)-keyed shuffle, so they add linear work, not a
-    cross-table join; the candidate union is deduplicated BEFORE the
-    verify so each surviving pair is scored once.
+    cosine verifies in one Arrow pass over the vectors each bucket row
+    carries.  Tables share one (table, bucket)-keyed shuffle, so they add
+    linear work, not a cross-table join; a pair colliding in several
+    tables is scored in each and kept once.
 
     Degenerate buckets — many near-identical or zero vectors, common in
     real embedding corpora with collapsed encoders — would otherwise emit
     O(bucket²) candidates on one hot key.  The same guard as the minhash
-    twin applies: (table, bucket) groups over `max_bucket_size` are
-    dropped via a broadcast anti join of the (small) over-limit side.  A
-    corpus region dense enough to blow the cap in EVERY table is by
-    definition one equivalence class of near-dups; route it through
-    exact_dedup / a representative-pivot pass instead of all-pairs.
-
-    Caches the (id, table, bucket) projection table; the caller owns the
-    lifetime — see release_caches()."""
+    twin applies: a (table, bucket) group over `max_bucket_size` rows is
+    dropped before it is collected.  A corpus region dense enough to blow the cap
+    in EVERY table is by definition one equivalence class of near-dups;
+    route it through exact_dedup / a representative-pivot pass instead of
+    all-pairs."""
     if dim is None:
         dim = len(df.select(vec_col).head()[0])
     rng = np.random.RandomState(seed)
@@ -1183,42 +1173,11 @@ def embedding_dup_pairs(
         Bm = Bm / (np.linalg.norm(Bm, axis=1, keepdims=True) + 1e-300)
         return pd.Series(np.einsum("ij,ij->i", Am, Bm))
 
-    # the hyperplane projection UDF runs ONCE into a cached (id, table,
-    # bucket) table — 3 longs per row, n_tables × corpus rows — instead of
-    # re-running the Arrow matmul for the guard's groupBy, the anti-join
-    # side and both self-join aliases; vectors rejoin by id only for the
-    # verify, so the bucket-keyed shuffle never carries them
-    bucketed = df.select(
-        F.col(id_col),
+    rows = df.select(
+        F.col(id_col), F.col(vec_col),
         F.posexplode(_buckets(F.col(vec_col))).alias("table", "bucket"),
-    ).cache()
-    # skew guard (ported from minhash_lsh_candidates): only the OVER-limit
-    # bucket set is guaranteed small, so broadcast that side as an anti
-    # join — the kept-buckets table grows with the corpus.
-    oversized = (bucketed.groupBy("table", "bucket").count()
-                 .filter(F.col("count") > max_bucket_size))
-    kept = bucketed.join(F.broadcast(oversized.select("table", "bucket")),
-                         ["table", "bucket"], "left_anti")
-    a, b = kept.alias("a"), kept.alias("b")
-    cands = (
-        a.join(b, (F.col("a.table") == F.col("b.table"))
-               & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
     )
-    if n_tables > 1:
-        cands = cands.dropDuplicates(["id_a", "id_b"])
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
-    result = (
-        cands.join(va, "id_a").join(vb, "id_b")
-        .select(
-            "id_a", "id_b",
-            _pair_cos(F.col("__va"), F.col("__vb")).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
-    result._dedup_caches = (bucketed,)
-    return result
+    return _bucket_pairs(
+        rows, id_col, ["table", "bucket"], vec_col, max_bucket_size,
+        lambda a, b: _pair_cos(a, b).alias("cosine"),
+    ).where(F.col("cosine") >= threshold)

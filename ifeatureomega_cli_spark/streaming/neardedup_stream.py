@@ -24,7 +24,8 @@ streaming):
   the DELIVERED parquet matches batch output exactly — no sink-side
   SELECT DISTINCT needed;
 * degenerate buckets: the batch twins DROP an over-limit bucket entirely
-  (max_bucket_size anti join), while a streaming bucket cannot retract —
+  (their grouped pair pass keeps a bucket only if it holds at most
+  max_bucket_size rows), while a streaming bucket cannot retract —
   it saturates at `max_bucket_state`: the first `max_bucket_state` docs
   (by doc_id within each micro-batch) are kept and later arrivals are
   ignored, so degenerate buckets are O(cap²) bounded but the two twins

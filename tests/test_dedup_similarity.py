@@ -262,16 +262,22 @@ def test_embedding_dup_pairs_bucket_cap_degenerate(spark):
     ONE (table, bucket) group in every table; without the cap that is
     O(n²) candidate pairs on a single hot key.  With the cap the oversized
     bucket is dropped entirely — zero pairs, no blow-up — mirroring
-    minhash_lsh_candidates' stop-shingle guard."""
+    minhash_lsh_candidates' stop-shingle guard.  At the cap ± 1: a bucket
+    of exactly max_bucket_size rows keeps all its pairs, one more row drops
+    it."""
     from ifeatureomega_cli_spark.operators.dedup import embedding_dup_pairs
 
-    n = 600
     v = [1.0] * 16
-    df = spark.createDataFrame([(i, v) for i in range(n)],
-                               "vec_id long, embedding array<double>")
-    capped = embedding_dup_pairs(df, threshold=0.99, n_planes=8,
-                                 max_bucket_size=100)
-    assert capped.count() == 0
+
+    def corpus(n):
+        return spark.createDataFrame([(i, v) for i in range(n)],
+                                     "vec_id long, embedding array<double>")
+
+    for n, want in ((100, 100 * 99 // 2), (101, 0), (600, 0)):
+        capped = embedding_dup_pairs(corpus(n), threshold=0.99, n_planes=8,
+                                     max_bucket_size=100)
+        assert capped.count() == want, n
+    n, df = 600, corpus(600)
     # sanity: with the cap lifted the same corpus is all-pairs (bounded n
     # here keeps the test cheap; at corpus scale this is the blow-up)
     uncapped = embedding_dup_pairs(df, threshold=0.99, n_planes=8,
@@ -400,16 +406,43 @@ def test_dedup_components_long_chain_log_rounds(spark):
 def test_simhash_bucket_cap_degenerate(spark):
     """Batch simhash skew guard (round 5, symmetric with minhash): many
     identical texts share simhash and every band key; the cap drops the
-    blown buckets instead of self-joining O(n²) on one hot key."""
+    blown buckets instead of emitting O(n²) pairs on one hot key.  At the
+    cap ± 1: max_bucket_size rows keep all pairs, one more drops them."""
     from ifeatureomega_cli_spark.operators.dedup import simhash_dup_pairs
 
-    n = 300
-    df = spark.createDataFrame(
-        [(i, "identical boilerplate text everywhere") for i in range(n)],
-        "doc_id long, text string")
-    assert simhash_dup_pairs(df, max_bucket_size=100).count() == 0
+    def corpus(n):
+        return spark.createDataFrame(
+            [(i, "identical boilerplate text everywhere") for i in range(n)],
+            "doc_id long, text string")
+
+    for n, want in ((100, 100 * 99 // 2), (101, 0), (300, 0)):
+        assert simhash_dup_pairs(corpus(n), max_bucket_size=100).count() \
+            == want, n
+    n, df = 300, corpus(300)
     uncapped = simhash_dup_pairs(df, max_bucket_size=10**9)
     assert uncapped.count() == n * (n - 1) // 2
+
+
+def test_minhash_lsh_candidates_bucket_cap(spark):
+    """The minhash stop-shingle guard at the cap ± 1, and a pair whose
+    FIRST colliding band sits in an oversized (dropped) bucket: it is
+    still a candidate through a later band it shares — the reason the pair
+    pass keeps its final dedupe instead of emitting a pair only at its
+    first colliding band.  Docs 0..cap all share band 0 (cap + 1 rows:
+    dropped); only docs 0 and 1 also share band 1."""
+    from ifeatureomega_cli_spark.operators.dedup import minhash_lsh_candidates
+
+    cap = 3
+    rows = [(i, [7, 7, 100 + i, 100 + i]) for i in range(cap + 1)]
+    rows[1] = (1, [7, 7, 100, 100])  # doc 1 = doc 0 in band 1 as well
+    sigs = spark.createDataFrame(rows, "doc_id long, sig array<long>")
+    got = minhash_lsh_candidates(sigs, bands=2, max_bucket_size=cap).collect()
+    assert [tuple(r) for r in got] == [(0, 1)]
+    # band 0's bucket at exactly the cap keeps every pair, (0, 1) once
+    got = minhash_lsh_candidates(sigs, bands=2, max_bucket_size=cap + 1)
+    pairs = sorted(tuple(r) for r in got.collect())
+    assert pairs == [(a, b) for a in range(cap + 1)
+                     for b in range(a + 1, cap + 1)]
 
 
 def test_bands_not_dividing_signature_rejected(spark, planted_docs):
@@ -425,16 +458,27 @@ def test_bands_not_dividing_signature_rejected(spark, planted_docs):
 
 
 def test_release_caches_unpersists_intermediates(spark, planted_docs):
-    from ifeatureomega_cli_spark.operators.dedup import (minhash_dedup,
-                                                         release_caches)
+    """ngram_jaccard_pairs is the one dedup operator that persists an
+    intermediate; the three LSH operators run one pass over their
+    signatures and hold nothing, so release_caches is a no-op on them."""
+    from pyspark.sql import DataFrame
 
-    out = minhash_dedup(planted_docs, threshold=0.8, bands=8)
-    out.count()  # materialize (populates the signature cache)
-    cached = out._dedup_caches
+    from ifeatureomega_cli_spark.operators import dedup as D
+
+    out = D.ngram_jaccard_pairs(planted_docs, shingle_n=3, threshold=0.4)
+    out.count()
+    cached = [c for c in out._dedup_caches if isinstance(c, DataFrame)]
     assert cached and all(c.storageLevel.useMemory for c in cached)
-    release_caches(out)
+    D.release_caches(out)
     assert not any(c.storageLevel.useMemory for c in cached)
-    release_caches(planted_docs)  # no handles attached: a clean no-op
+    emb = spark.createDataFrame([(i, [float(i), 1.0]) for i in range(4)],
+                                "vec_id long, embedding array<double>")
+    for lsh in (D.minhash_dedup(planted_docs, threshold=0.8, bands=8),
+                D.simhash_dup_pairs(planted_docs),
+                D.embedding_dup_pairs(emb, threshold=0.9, n_planes=4)):
+        assert not hasattr(lsh, "_dedup_caches")
+        D.release_caches(lsh)  # no handles attached: a clean no-op
+    D.release_caches(planted_docs)
 
 
 def test_shuffle_partitions_auto(spark, planted_docs, monkeypatch):

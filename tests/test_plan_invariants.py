@@ -195,21 +195,38 @@ def test_pipeline_clean_gate_fused_dedup_is_the_wide_stage(spark):
     assert _nodes(plan, "Exchange") <= 6, plan
 
 
+def _assert_grouped_bucket_pass(plan: str, n_python: int) -> None:
+    """The LSH dedup operators' shared shape: one bucket-keyed grouped
+    pass emits and scores the in-bucket pairs, with no join and no
+    broadcast (the oversized-bucket cap is a windowed row count), and each
+    Python UDF is evaluated exactly once (a threshold filter pushed below
+    the dedupe would re-evaluate the score UDF).  The cap is a windowed
+    row count filtered before the collect_list aggregate, so an oversized
+    bucket's rows are dropped before they could be built into one array."""
+    assert "NestedLoop" not in plan and "CartesianProduct" not in plan, plan
+    assert "Join" not in plan, plan
+    assert _nodes(plan, "BroadcastExchange") == 0, plan
+    assert _nodes(plan, "ArrowEvalPython") == n_python, plan
+    nodes = [(int(m[1]), m[2], m[3]) for m in re.finditer(
+        r"^\((\d+)\) (\w+)(.*?)(?=\n\n|\Z)", plan, re.MULTILINE | re.DOTALL)]
+    window = [i for i, name, _ in nodes if name == "Window"]
+    cap = [i for i, name, body in nodes if name == "Filter" and "_n#" in body]
+    collect = [i for i, _, body in nodes if "collect_list" in body]
+    assert len(window) == 1 and len(cap) == 1 and collect, plan
+    assert window[0] < cap[0] < min(collect), plan
+
+
 def test_embedding_dup_pairs_bucket_keyed_no_cartesian(spark):
-    """Embedding LSH near-dup: the candidate join must be an equi-join
-    keyed on (table, bucket) — never a nested-loop/cartesian — and the
-    round-5 oversized-bucket guard must broadcast only the small over-limit
-    side (anti join)."""
+    """Embedding LSH near-dup: candidates come from one grouped pass keyed
+    on (table, bucket) — never a nested-loop/cartesian or any join — and
+    the two UDFs (_buckets, _pair_cos) run once each."""
     from ifeatureomega_cli_spark.operators.dedup import embedding_dup_pairs
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     plan = _plan(embedding_dup_pairs(emb, threshold=0.95, n_planes=8))
-    assert "NestedLoop" not in plan and "CartesianProduct" not in plan, plan
     # candidate generation keyed on the bucket tuple
     assert re.search(r"hashpartitioning\((table|bucket)", plan), plan
-    # the cap's anti join broadcasts the oversized-buckets side
-    assert "LeftAnti BuildRight" in plan, plan
-    assert _nodes(plan, "BroadcastExchange") >= 1, plan
+    _assert_grouped_bucket_pass(plan, n_python=2)
 
 
 def test_bucketed_join_no_exchange(spark, tmp_path):
@@ -258,17 +275,16 @@ def test_bucketed_join_no_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_bucket_right")
 
 
-def test_simhash_cap_broadcasts_over_limit_side(spark):
-    """Batch simhash's round-5 skew guard mirrors minhash/embedding: the
-    oversized-bucket drop is a broadcast anti join (small over-limit side
-    built), candidate generation stays a keyed equi-join — no cartesian."""
+def test_simhash_bucket_pass_no_join(spark):
+    """Batch simhash mirrors minhash/embedding: one (band, key)-keyed
+    grouped pass drops oversized buckets before collecting and emits the
+    pairs — no join, no broadcast, the signature UDF evaluated once."""
     from ifeatureomega_cli_spark.operators.dedup import simhash_dup_pairs
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     plan = _plan(simhash_dup_pairs(docs, max_hamming=8))
-    assert "LeftAnti BuildRight" in plan, plan
-    assert "NestedLoop" not in plan and "CartesianProduct" not in plan, plan
-    assert _nodes(plan, "BroadcastExchange") >= 1, plan
+    assert re.search(r"hashpartitioning\((band|key)", plan), plan
+    _assert_grouped_bucket_pass(plan, n_python=1)
 
 
 def test_component_round_plan_join_only(spark):
@@ -293,13 +309,12 @@ def test_minhash_dedup_plan_verify_stays_jvm(spark):
     JVM-side zip_with expression (round-6 A/B: 1.7× faster than an Arrow
     pandas UDF at 1M pairs — see BENCH/BASELINE.md §verify-ab); the only
     Python node in the plan is the signature UDF.  Candidate generation
-    stays a (band, bucket)-keyed equi-join with the broadcast LeftAnti
-    skew guard; no cartesian anywhere."""
+    is one (band, bucket)-keyed grouped pass whose oversized-bucket cap is
+    a windowed row count: no join, no broadcast, no cartesian."""
     from ifeatureomega_cli_spark.operators.dedup import minhash_dedup
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     plan = _plan(minhash_dedup(docs, threshold=0.8, bands=8))
     assert "zip_with" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert re.search(r"LeftAnti BuildRight", plan), plan
+    assert re.search(r"hashpartitioning\((band|bucket)", plan), plan
+    _assert_grouped_bucket_pass(plan, n_python=1)
