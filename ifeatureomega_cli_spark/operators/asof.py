@@ -49,11 +49,8 @@ def asof_join(
         payload.alias("__payload"),
     )
     left_cols = left.columns
-    l = left.select(
-        *[F.col(c) for c in left_cols],
-        F.lit(1).alias("__side"),
-        F.lit(None).cast(r.schema["__payload"].dataType).alias("__payload"),
-    )
+    l = left.select(*[F.col(c) for c in left_cols], F.lit(1).alias("__side"))
+    # the missing `__payload` comes back as a typed null
     unioned = l.unionByName(r, allowMissingColumns=True)
 
     w = (
@@ -72,7 +69,7 @@ def asof_join(
         )
         m = F.when(within, F.col("__m"))
 
-    sel = [F.col(c) for c in left_cols if c in left_cols]
+    sel = [F.col(c) for c in left_cols]
     sel.append(m["__rts"].alias("matched_ts"))
     for c in value_cols:
         sel.append(m[c].alias(c + suffix))

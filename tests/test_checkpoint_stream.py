@@ -119,6 +119,116 @@ def test_checkpoint_manifest_read_errors_raise(spark, tmp_path):
     with pytest.raises(pa.ArrowInvalid):
         run.completed_buckets()
 
+
+def test_checkpoint_failed_wave_stops_run(spark, tmp_path):
+    """A wave whose transform raises: `run` re-raises that exception, no
+    wave starts after it, the wave in flight beside it still records its
+    buckets, no pool thread outlives the run, and a resume recomputes
+    exactly the buckets that were not recorded."""
+    import threading
+
+    import pyarrow.parquet as pq
+
+    class WaveFailed(RuntimeError):
+        pass
+
+    lock = threading.Lock()
+    failed = threading.Event()
+    calls = []
+
+    def transform(df):
+        with lock:
+            calls.append(failed.is_set())
+            n = len(calls)
+        if n == 2:
+            failed.set()
+            raise WaveFailed("second wave")
+        # the first wave writes only after the failure, so a wave that
+        # started before the failure was noticed cannot hide here
+        assert failed.wait(30)
+        return df.select("doc_id", "bucket")
+
+    src = sequences(spark, 40)
+    run = CheckpointedRun(spark, str(tmp_path / "ckpt"), n_buckets=8, waves=4)
+    with pytest.raises(WaveFailed, match="second wave"):
+        run.run(src, transform)
+    assert calls == [False, False]  # 2 of 4 waves ran, none after the failure
+    recorded = run.completed_buckets()
+    assert len(recorded) == 2  # the neighbour wave finished and recorded
+    assert not [t for t in threading.enumerate()
+                if t.name.startswith("checkpoint-wave")]
+
+    resume = CheckpointedRun(spark, str(tmp_path / "ckpt"), n_buckets=8,
+                             waves=4)
+    m = resume.run(src, lambda df: df.select("doc_id", "bucket"))
+    man = pq.read_table(resume.manifest_dir).to_pandas()
+    redone = set(man.loc[man["run_id"] == m["run_id"], "bucket"])
+    assert redone == set(range(8)) - recorded
+    assert m["buckets_processed"] == len(redone) and m["buckets_skipped"] == 2
+    assert resume.read().count() == 40
+    assert resume.read().select("doc_id").distinct().count() == 40
+
+
+def test_checkpoint_waves_keep_callers_job_group(spark, tmp_path):
+    """Every job a run starts carries the caller's job group: none is
+    orphaned by the pool threads, and the session is handed to
+    `inheritable_thread_target` (no "Tags will not be inherited")."""
+    import warnings
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("g", "checkpoint run")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            run = CheckpointedRun(spark, str(tmp_path / "ckpt"), n_buckets=8,
+                                  waves=4)
+            run.run(sequences(spark, 40), lambda df: df.select("doc_id", "bucket"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    grouped = sorted(tracker.getJobIdsForGroup("g"))
+    assert len(grouped) >= 4  # one write per wave
+    assert set(tracker.getJobIdsForGroup()) == ungrouped
+    # job ids are dealt in order: no job of another group between them
+    assert grouped == list(range(grouped[0], grouped[-1] + 1))
+    assert not [w for w in caught
+                if "Tags will not be inherited" in str(w.message)]
+
+
+def test_checkpoint_concurrent_waves_commit(spark, tmp_path):
+    """8 buckets in 4 waves, two writing at once into one directory: each
+    dynamic-overwrite write stages under its own `.spark-staging-<jobId>`
+    and renames only its own bucket partitions, so the output is the
+    transform of the whole source, no staging directory is left, and the
+    manifest counts the rows written per bucket."""
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    src = sequences(spark, 40)
+    transform = lambda df: df.select("doc_id", "bucket", "n_tok", "source")
+    run = CheckpointedRun(spark, str(tmp_path / "ckpt"), n_buckets=8, waves=4)
+    m = run.run(src, transform)
+    cols = ["doc_id", "bucket", "n_tok", "source"]
+    want = Counter(tuple(r) for r in
+                   transform(bucket_by(src, "doc_id", 8)).select(cols).collect())
+    got = Counter(tuple(r) for r in run.read().select(cols).collect())
+    assert got == want and m["rows"] == 40
+    assert not [d for _, ds, _ in os.walk(run.data_dir) for d in ds
+                if d.startswith(".spark-staging")]
+    man = pq.read_table(run.manifest_dir).to_pandas()
+    written = Counter(b for _, b, _, _ in want)
+    assert dict(zip(man["bucket"], man["n_rows"])) == {
+        b: written.get(b, 0) for b in range(8)}
+    # the waves really overlapped: a wave started before another finished
+    spans = sorted((f - s, f) for s, f in
+                   man.groupby("seconds")["finished_at"].min().items())
+    assert len(spans) == 4
+    assert any(b[0] < a[1] for a, b in zip(spans, spans[1:]))
+
 def test_two_phase_count_matches_plain(spark):
     src = sequences(spark, 200)
     plain = {r["source"]: r["count"] for r in
