@@ -148,14 +148,9 @@ def asof_join_skew(
         *[F.col(c) for c in left.columns],
         bucket_of(F.col(ts)).alias("__b"),
         F.lit(1).alias("__side"),
-        F.lit(None).cast(r.schema["__payload"].dataType).alias("__payload"),
     )
-    unioned = l.unionByName(
-        r.select(*[F.lit(None).cast(left.schema[c].dataType).alias(c)
-                   for c in left.columns if c not in (on, ts)],
-                 F.col(on), F.col(ts), "__b", "__side", "__payload"),
-        allowMissingColumns=True,
-    )
+    # each side's missing columns come back as typed nulls
+    unioned = l.unionByName(r, allowMissingColumns=True)
     wloc = (Window.partitionBy(on, "__b")
             .orderBy(F.col(ts).asc(), F.col("__side").asc())
             .rowsBetween(Window.unboundedPreceding, 0))

@@ -1,37 +1,31 @@
 """Pure-numpy JPEG (JFIF) codec — no libjpeg.
 
-Round 6 added the baseline sequential DCT codec; round 7 adds the
-PROGRESSIVE (SOF2) decoder — spectral selection, successive approximation (DC and AC first + refinement
-scans, shared EOB runs, per T.81 Annex G.2) — validated against every
-real progressive JPEG shipped in this container (nodejs docs, Spark's
-mllib grayscale sample, the rust embedded-book photo) plus an exact
-cross-codec differential oracle (`encode_jpeg_progressive` emits the
-same quantized coefficients as the baseline encoder, so both decodes
-must be bit-identical).
-Scope (honest): 8-bit AND 12-bit samples (extended sequential per
-T.81 — 12-bit decodes to uint16), grayscale or YCbCr 4:4:4 / 4:2:2 /
-4:2:0, restart markers, sequential + progressive Huffman, AND — round
-7 late — ARITHMETIC coding, both sequential (SOF9) and progressive
-(SOF10), via the T.81 Annex D QM-coder in `operators/jpeg_arith.py`,
-validated bit-exact against libjpeg coefficient dumps on 11 real
-streams — and, round 8, LOSSLESS (SOF3, T.81 Annex H: the seven
-neighbor predictors + point transform, 2-16 bit samples, no DCT) and
-HIERARCHICAL (DHP, Annex J: EXP reference expansion + differential
-SOF5/SOF7 frames) and Adobe 4-component CMYK/YCCK streams, sequential AND progressive
-(APP14 transform, inverted-ink multiply to RGB).  The full T.81
-decode surface is covered; the remaining refusals are 4-component
-LOSSLESS streams and non-Huffman/progressive frames inside a
-hierarchy (ValueError — the media dispatcher falls back to the
-stub).
+The decoder handles the Huffman-coded DCT frames of ITU T.81: baseline
+and extended sequential (SOF0/SOF1) and progressive (SOF2: spectral
+selection and successive approximation, with DC and AC first and
+refinement scans and shared EOB runs, per Annex G.2).  Samples are
+8-bit (decoded to uint8) or 12-bit (decoded to uint16).  Frames are
+grayscale, YCbCr at 4:4:4 / 4:2:2 / 4:2:0, or Adobe 4-component
+CMYK/YCCK (APP14 transform, inverted-ink multiply to RGB), with or
+without restart intervals.  Lossless (SOF3), differential (SOF5-7,
+SOF13-15), arithmetic (SOF9-11) and hierarchical (DHP) streams raise
+ValueError.
+
+The progressive decoder is checked against real progressive JPEGs
+(nodejs docs, Spark's mllib grayscale sample, the rust embedded-book
+photo) and against an exact cross-codec oracle:
+`encode_jpeg_progressive` emits the same quantized coefficients as
+`encode_jpeg`, so both decodes must be bit-identical.  Nothing else in
+the package calls the codec.
 
 Design notes:
 
 * the DECODER takes Huffman and quantization tables from the stream's
   own DHT/DQT segments, so decoding external JPEGs does not depend on
   any table transcribed here;
-* the ENCODER (tests + synthesize_media) uses the JPEG standard's
-  Annex K example tables and writes them into the stream — a round-trip
-  therefore exercises the full bitstream path end-to-end regardless;
+* the ENCODERS exist to test the decoder; they use the JPEG standard's
+  Annex K example tables and write them into the stream, so a
+  round-trip exercises the full bitstream path end-to-end;
 * zigzag order is GENERATED (diagonal walk), not transcribed;
 * the 2-D DCT/IDCT are exact orthonormal matrix products (numpy float64)
   — bit-identical reconstruction is impossible for a lossy codec, so the
@@ -185,6 +179,11 @@ class _BitWriter:
             self.write((1 << pad) - 1, pad)  # 1-fill padding
 
 
+def _segment(marker: int, body: bytes) -> bytes:
+    """Marker segment: FF marker, big-endian length (incl. itself), body."""
+    return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
+
+
 def _magnitude(v: int) -> tuple[int, int]:
     """JPEG magnitude category + appended bits for a signed value."""
     if v == 0:
@@ -196,7 +195,7 @@ def _magnitude(v: int) -> tuple[int, int]:
 
 
 def _encode_block(w: _BitWriter, block: np.ndarray, q: np.ndarray,
-                  dc_codes, ac_codes, pred: int, center: int = 128) -> int:
+                  dc_codes, ac_codes, pred: int, center: int) -> int:
     coef = _DCT @ (block - float(center)) @ _DCT.T
     quant = np.round(coef / q).astype(np.int64)
     zz = quant.ravel()[_ZIGZAG]
@@ -229,13 +228,13 @@ def _encode_block(w: _BitWriter, block: np.ndarray, q: np.ndarray,
 
 def encode_jpeg(rgb: np.ndarray, subsample: bool = False,
                 restart_interval: int = 0, bits: int = 8) -> bytes:
-    """Sequential JFIF encoder with Annex-K tables (tests +
-    synthesize_media).  `rgb`: (H, W, 3) or (H, W) uint8 — or, with
-    bits=12, uint16 samples in 0..4095 (extended sequential, SOF1,
-    flat Kraft-valid Huffman tables since Annex K's stop at the 8-bit
-    symbol range).  subsample=True writes 4:2:0 (2×2 Y blocks per MCU,
-    box-averaged chroma); restart_interval>0 emits DRI + RSTn markers —
-    all exist so the decoder's paths are hermetically testable."""
+    """Sequential JFIF encoder with Annex-K tables, used by the tests.
+    `rgb`: (H, W, 3) or (H, W) uint8 — or, with bits=12, uint16
+    samples in 0..4095 (extended sequential, SOF1, flat Kraft-valid
+    Huffman tables since Annex K's stop at the 8-bit symbol range).
+    subsample=True writes 4:2:0 (2×2 Y blocks per MCU, box-averaged
+    chroma); restart_interval>0 emits DRI + RSTn markers — all exist so
+    the decoder's paths are hermetically testable."""
     if bits not in (8, 12):
         raise ValueError(f"unsupported sample precision {bits}")
     center = 1 << (bits - 1)
@@ -264,22 +263,18 @@ def encode_jpeg(rgb: np.ndarray, subsample: bool = False,
             comps[ci] = c.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
     samp = [(ys, ys)] + [(1, 1)] * (ncomp - 1)
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") \
-            + body
-
     out = bytearray(b"\xff\xd8")  # SOI
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+    out += _segment(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
     qtabs = [_QUANT_LUMA] + ([] if gray else [_QUANT_CHROMA])
     for tid, q in enumerate(qtabs):
-        out += seg(0xDB, bytes([tid]) + bytes(
+        out += _segment(0xDB, bytes([tid]) + bytes(
             int(x) for x in q.ravel()[_ZIGZAG]))
     sof = bytes([bits]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") \
         + bytes([ncomp])
     for ci in range(ncomp):
         hs, vs = samp[ci]
         sof += bytes([ci + 1, (hs << 4) | vs, 0 if ci == 0 else 1])
-    out += seg(0xC0 if bits == 8 else 0xC1, sof)
+    out += _segment(0xC0 if bits == 8 else 0xC1, sof)
     if bits == 8:
         dc_luma, ac_luma, dc_chroma, ac_chroma = (
             _DC_LUMA, _AC_LUMA, _DC_CHROMA, _AC_CHROMA)
@@ -290,14 +285,14 @@ def encode_jpeg(rgb: np.ndarray, subsample: bool = False,
     if not gray:
         huffs += [(0x01, dc_chroma), (0x11, ac_chroma)]
     for tclass, (tbits, tvals) in huffs:
-        out += seg(0xC4, bytes([tclass]) + bytes(tbits) + bytes(tvals))
+        out += _segment(0xC4, bytes([tclass]) + bytes(tbits) + bytes(tvals))
     if restart_interval:
-        out += seg(0xDD, restart_interval.to_bytes(2, "big"))
+        out += _segment(0xDD, restart_interval.to_bytes(2, "big"))
     sos = bytes([ncomp])
     for ci in range(ncomp):
         sos += bytes([ci + 1, 0x00 if ci == 0 else 0x11])
     sos += bytes([0, 63, 0])
-    out += seg(0xDA, sos)
+    out += _segment(0xDA, sos)
 
     dc_l = _build_huffman(*dc_luma)
     ac_l = _build_huffman(*ac_luma)
@@ -361,27 +356,23 @@ def encode_jpeg_adobe(cmyk: np.ndarray, ycck: bool = False) -> bytes:
     comps = [np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge")
              for p in comps]
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") \
-            + body
-
     out = bytearray(b"\xff\xd8")
-    out += seg(0xEE, b"Adobe\x00\x64\x00\x00\x00\x00"
-               + bytes([2 if ycck else 0]))
-    out += seg(0xDB, bytes([0]) + bytes(
+    out += _segment(0xEE, b"Adobe\x00\x64\x00\x00\x00\x00"
+                    + bytes([2 if ycck else 0]))
+    out += _segment(0xDB, bytes([0]) + bytes(
         int(x) for x in _QUANT_LUMA.ravel()[_ZIGZAG]))
     sof = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") \
         + bytes([4])
     for ci in range(4):
         sof += bytes([ci + 1, 0x11, 0])
-    out += seg(0xC0, sof)
+    out += _segment(0xC0, sof)
     for tclass, (tbits, tvals) in ((0x00, _DC_LUMA), (0x10, _AC_LUMA)):
-        out += seg(0xC4, bytes([tclass]) + bytes(tbits) + bytes(tvals))
+        out += _segment(0xC4, bytes([tclass]) + bytes(tbits) + bytes(tvals))
     sos = bytes([4])
     for ci in range(4):
         sos += bytes([ci + 1, 0x00])
     sos += bytes([0, 63, 0])
-    out += seg(0xDA, sos)
+    out += _segment(0xDA, sos)
     dc = _build_huffman(*_DC_LUMA)
     ac = _build_huffman(*_AC_LUMA)
     wtr = _BitWriter()
@@ -395,269 +386,6 @@ def encode_jpeg_adobe(cmyk: np.ndarray, ycck: bool = False) -> bytes:
                                           ac, preds[ci], 128)
     wtr.flush()
     out += wtr.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-# Flat DC-style Huffman table for lossless streams: SSSS categories
-# 0..16 (category 16 = the special diff=32768 symbol), all at 5 bits —
-# canonical and Kraft-valid (17 * 2^-5 < 1).
-_DC_LOSSLESS = ([0, 0, 0, 0, 17, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0],
-                list(range(17)))
-
-
-def encode_jpeg_lossless(img: np.ndarray, predictor: int = 1,
-                         pt: int = 0, bits: int | None = None,
-                         restart_interval: int = 0) -> bytes:
-    """Lossless (SOF3) encoder — test support for `_decode_lossless`.
-
-    `img`: (H, W) or (H, W, C<=4) non-negative integers; `bits` is the
-    sample precision (default: smallest 2..16 that fits the data).
-    Components are written in one interleaved scan at 1x1 sampling
-    (what real lossless writers emit).  The point transform Pt drops
-    `pt` low bits before prediction (the decoder shifts back — the
-    round-trip then reconstructs img with the low bits zeroed).
-    """
-    if img.ndim == 2:
-        img = img[:, :, None]
-    h, w, nc = img.shape
-    if nc > 4:
-        raise ValueError(f"unsupported component count {nc}")
-    if not 1 <= predictor <= 7:
-        raise ValueError(f"bad lossless predictor {predictor}")
-    if bits is None:
-        bits = max(2, int(img.max()).bit_length())
-    if not 2 <= bits <= 16:
-        raise ValueError(f"unsupported sample precision {bits}")
-    samples = (img.astype(np.int64) >> pt)
-    default = 1 << (bits - pt - 1)
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    # DHT: one table (class 0, id 0) shared by every component
-    tbits, tvals = _DC_LOSSLESS
-    seg = bytes([0x00]) + bytes(tbits) + bytes(tvals)
-    out += b"\xff\xc4" + (len(seg) + 2).to_bytes(2, "big") + seg
-    # SOF3
-    sof = bytes([bits]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") \
-        + bytes([nc])
-    for ci in range(nc):
-        sof += bytes([ci + 1, 0x11, 0])
-    out += b"\xff\xc3" + (len(sof) + 2).to_bytes(2, "big") + sof
-    if restart_interval:
-        out += b"\xff\xdd\x00\x04" + restart_interval.to_bytes(2, "big")
-    # SOS: Ss = predictor, Se = 0, Ah = 0, Al = Pt
-    sos = bytes([nc])
-    for ci in range(nc):
-        sos += bytes([ci + 1, 0x00])
-    sos += bytes([predictor, 0, pt])
-    out += b"\xff\xda" + (len(sos) + 2).to_bytes(2, "big") + sos
-
-    codes = _build_huffman(tbits, tvals)
-    wtr = _BitWriter()
-    rstart = [(0, 0)] * nc
-    rst = 0
-    mcu_count = 0
-    for y in range(h):
-        for x in range(w):
-            if restart_interval and mcu_count and \
-                    mcu_count % restart_interval == 0:
-                wtr.flush()
-                wtr.out += bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) % 8
-                for ci in range(nc):
-                    rstart[ci] = (y, x)
-            for ci in range(nc):
-                p = samples[:, :, ci]
-                ry, rx = rstart[ci]
-                if y == ry and x >= rx:
-                    px = default if x == rx else int(p[y, x - 1])
-                elif x == 0:
-                    px = int(p[y - 1, 0])
-                else:
-                    ra, rb, rc = (int(p[y, x - 1]), int(p[y - 1, x]),
-                                  int(p[y - 1, x - 1]))
-                    px = (ra, rb, rc, ra + rb - rc,
-                          ra + ((rb - rc) >> 1), rb + ((ra - rc) >> 1),
-                          (ra + rb) >> 1)[predictor - 1]
-                diff = (int(p[y, x]) - px) & 0xFFFF
-                if diff >= 32768:
-                    diff -= 65536
-                if diff == -32768:            # category 16, no extra bits
-                    c, l = codes[16]
-                    wtr.write(c, l)
-                else:
-                    size, ebits = _magnitude(diff)
-                    c, l = codes[size]
-                    wtr.write(c, l)
-                    if size:
-                        wtr.write(ebits, size)
-            mcu_count += 1
-    wtr.flush()
-    out += wtr.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _lossless_entropy(samples: np.ndarray, codes, predictor: int,
-                      default: int, diff_src: np.ndarray | None) -> bytes:
-    """Entropy-code a (H, W, C) sample array for a lossless frame.
-    diff_src=None: neighbor prediction per Annex H (predictor 1-7,
-    scan-start default).  diff_src given: DIFFERENTIAL frame — code
-    samples-minus-diff_src mod 2^16 (Annex J.2.3, no prediction)."""
-    h, w, nc = samples.shape
-    wtr = _BitWriter()
-    for y in range(h):
-        for x in range(w):
-            for ci in range(nc):
-                p = samples[:, :, ci]
-                if diff_src is not None:
-                    px = int(diff_src[y, x, ci])
-                elif y == 0:
-                    px = default if x == 0 else int(p[0, x - 1])
-                elif x == 0:
-                    px = int(p[y - 1, 0])
-                else:
-                    ra, rb, rc = (int(p[y, x - 1]), int(p[y - 1, x]),
-                                  int(p[y - 1, x - 1]))
-                    px = (ra, rb, rc, ra + rb - rc,
-                          ra + ((rb - rc) >> 1), rb + ((ra - rc) >> 1),
-                          (ra + rb) >> 1)[predictor - 1]
-                diff = (int(p[y, x]) - px) & 0xFFFF
-                if diff >= 32768:
-                    diff -= 65536
-                if diff == -32768:
-                    c, l = codes[16]
-                    wtr.write(c, l)
-                else:
-                    size, ebits = _magnitude(diff)
-                    c, l = codes[size]
-                    wtr.write(c, l)
-                    if size:
-                        wtr.write(ebits, size)
-    wtr.flush()
-    return bytes(wtr.out)
-
-
-def _sof_segment(marker: int, bits: int, h: int, w: int, nc: int) -> bytes:
-    sof = bytes([bits]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") \
-        + bytes([nc])
-    for ci in range(nc):
-        sof += bytes([ci + 1, 0x11, 0])
-    return bytes([0xFF, marker]) + (len(sof) + 2).to_bytes(2, "big") + sof
-
-
-def encode_jpeg_hierarchical(img: np.ndarray, levels: int = 2,
-                             lossless: bool = True, predictor: int = 1,
-                             bits: int | None = None) -> bytes:
-    """Hierarchical (DHP, Annex J) encoder — test support for
-    `_decode_hierarchical`.
-
-    Builds a `levels`-deep decimation pyramid; the coarsest level is a
-    non-differential frame, each finer level an EXP + differential
-    frame against the expanded reconstruction.  lossless=True writes
-    an SOF3 + SOF7 chain — exact round-trip by construction (the
-    lossless base reconstructs bit-identically, so every differential
-    closes).  lossless=False (grayscale only) writes an SOF0 + SOF5
-    DCT chain with a unit quant table on the differentials, closed-
-    loop against this module's own decoder.
-    """
-    if img.ndim == 2:
-        img = img[:, :, None]
-    h, w, nc = img.shape
-    if levels < 1:
-        raise ValueError("levels must be >= 1")
-    if bits is None:
-        bits = max(2, int(img.max()).bit_length()) if lossless else 8
-    pyramid = [img.astype(np.int64)]
-    for _ in range(levels - 1):
-        pyramid.append(pyramid[-1][::2, ::2])
-    pyramid.reverse()               # coarsest first
-
-    out = bytearray(b"\xff\xd8")
-    dhp = _sof_segment(0xDE, bits, h, w, nc)
-    out += dhp
-    if lossless:
-        tbits, tvals = _DC_LOSSLESS
-        seg = bytes([0x00]) + bytes(tbits) + bytes(tvals)
-        out += b"\xff\xc4" + (len(seg) + 2).to_bytes(2, "big") + seg
-        codes = _build_huffman(tbits, tvals)
-        default = 1 << (bits - 1)
-        recon = None
-        for li, level in enumerate(pyramid):
-            lh, lw = level.shape[:2]
-            if li == 0:
-                out += _sof_segment(0xC3, bits, lh, lw, nc)
-                sos = bytes([nc])
-                for ci in range(nc):
-                    sos += bytes([ci + 1, 0x00])
-                sos += bytes([predictor, 0, 0])
-                out += b"\xff\xda" + (len(sos) + 2).to_bytes(2, "big") + sos
-                out += _lossless_entropy(level, codes, predictor,
-                                         default, None)
-                recon = level
-            else:
-                ref = np.stack([_expand_ref(recon[:, :, ci], 1, 1)
-                                for ci in range(nc)], axis=2)[:lh, :lw]
-                out += b"\xff\xdf\x00\x03\x11"          # EXP both axes
-                out += _sof_segment(0xC7, bits, lh, lw, nc)
-                sos = bytes([nc])
-                for ci in range(nc):
-                    sos += bytes([ci + 1, 0x00])
-                sos += bytes([0, 0, 0])                 # Ss=0: differential
-                out += b"\xff\xda" + (len(sos) + 2).to_bytes(2, "big") + sos
-                out += _lossless_entropy(level, codes, 0, default, ref)
-                recon = level                           # exact closure
-        out += b"\xff\xd9"
-        return bytes(out)
-
-    # DCT chain (grayscale): embed the coarsest level as this module's
-    # own sequential encoding (segments reused verbatim), then unit-
-    # quant differential frames closed against our decoder.
-    if nc != 1:
-        raise ValueError("DCT hierarchical encoder supports grayscale")
-    base = pyramid[0][:, :, 0].astype(np.uint8)
-    base_bytes = encode_jpeg(base)
-    out += base_bytes[2:-2]                    # strip SOI/EOI
-    recon = decode_jpeg(base_bytes)[:, :, 0].astype(np.int64)
-    q1 = np.ones((8, 8), dtype=np.int32)
-    for level in pyramid[1:]:
-        lh, lw = level.shape[:2]
-        ref = _expand_ref(recon, 1, 1)[:lh, :lw]
-        diff = level[:, :, 0] - ref
-        # DQT id 1: unit table for the differential
-        out += b"\xff\xdb" + (67).to_bytes(2, "big") + bytes([0x01]) \
-            + bytes(q1.ravel()[_ZIGZAG].astype(np.uint8).tolist())
-        # flat extended tables (class 0/1, id 1) cover the diff range
-        for tclass, (tb, tv) in ((0, _DC_EXT), (1, _AC_EXT)):
-            seg = bytes([(tclass << 4) | 0x01]) + bytes(tb) + bytes(tv)
-            out += b"\xff\xc4" + (len(seg) + 2).to_bytes(2, "big") + seg
-        out += b"\xff\xdf\x00\x03\x11"
-        out += _sof_segment(0xC5, 8, lh, lw, 1)
-        out[-1] = 0x01                          # frame's quant id -> 1
-        sos = bytes([1, 1, 0x11, 0, 63, 0])
-        out += b"\xff\xda" + (len(sos) + 2).to_bytes(2, "big") + sos
-        dc_codes = _build_huffman(*_DC_EXT)
-        ac_codes = _build_huffman(*_AC_EXT)
-        ph, pw = -(-lh // 8) * 8, -(-lw // 8) * 8
-        padded = np.zeros((ph, pw), dtype=np.float64)
-        padded[:lh, :lw] = diff
-        wtr = _BitWriter()
-        pred = 0
-        rec_diff = np.zeros((ph, pw), dtype=np.int64)
-        for by in range(0, ph, 8):
-            for bx in range(0, pw, 8):
-                block = padded[by: by + 8, bx: bx + 8]
-                pred = _encode_block(wtr, block, q1, dc_codes, ac_codes,
-                                     pred, center=0)
-                # closed loop: decoder-side rounded IDCT of the
-                # quantized coefficients
-                coef = np.round(_DCT @ block @ _DCT.T)
-                rec_diff[by: by + 8, bx: bx + 8] = np.rint(
-                    _DCT.T @ coef @ _DCT)
-        wtr.flush()
-        out += wtr.out
-        # mirror the decoder: reference components are clamped images
-        recon = np.clip(ref + rec_diff[:lh, :lw], 0, 255)
     out += b"\xff\xd9"
     return bytes(out)
 
@@ -706,30 +434,25 @@ def encode_jpeg_progressive(rgb: np.ndarray, cmyk: bool = False) -> bytes:
         coef = np.einsum("ij,xyjk,kl->xyil", _DCT, plane - 128.0, _DCT.T)
         quant = np.round(coef / q).astype(np.int64)
         zzs.append(quant.reshape(bh, bw, 64)[:, :, _ZIGZAG])
-    # header
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") \
-            + body
-
     out = bytearray(b"\xff\xd8")
     if cmyk:
-        out += seg(0xEE, b"Adobe\x00\x64\x00\x00\x00\x00\x00")
+        out += _segment(0xEE, b"Adobe\x00\x64\x00\x00\x00\x00\x00")
     else:
-        out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+        out += _segment(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
     qtabs = [_QUANT_LUMA] + ([] if gray else [_QUANT_CHROMA])
     for tid, qt in enumerate(qtabs):
-        out += seg(0xDB, bytes([tid]) + bytes(
+        out += _segment(0xDB, bytes([tid]) + bytes(
             int(x) for x in qt.ravel()[_ZIGZAG]))
     sof = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") \
         + bytes([ncomp])
     for ci in range(ncomp):
         sof += bytes([ci + 1, 0x11, 0 if ci == 0 else 1])
-    out += seg(0xC2, sof)
+    out += _segment(0xC2, sof)
     huffs = [(0x00, _DC_LUMA), (0x10, _AC_LUMA)]
     if not gray:
         huffs += [(0x01, _DC_CHROMA), (0x11, _AC_CHROMA)]
     for tclass, (bits, vals) in huffs:
-        out += seg(0xC4, bytes([tclass]) + bytes(bits) + bytes(vals))
+        out += _segment(0xC4, bytes([tclass]) + bytes(bits) + bytes(vals))
 
     dc_codes = [_build_huffman(*_DC_LUMA), _build_huffman(*_DC_CHROMA)]
     ac_codes = [_build_huffman(*_AC_LUMA), _build_huffman(*_AC_CHROMA)]
@@ -740,7 +463,7 @@ def encode_jpeg_progressive(rgb: np.ndarray, cmyk: bool = False) -> bytes:
             t = 0 if cid == 1 else 1
             body += bytes([cid, (t << 4) | t])
         body += bytes([ss, se, (ah << 4) | al])
-        return seg(0xDA, body)
+        return _segment(0xDA, body)
 
     def scan_bytes(emit):
         wtr = _BitWriter()
@@ -931,27 +654,47 @@ def _decode_huff(r: _BitReader, table) -> int:
     raise ValueError("invalid Huffman code")
 
 
+def _read_dqt(body: bytes, qtabs: dict) -> None:
+    """DQT segment (possibly several tables) → qtabs[id] in natural order."""
+    while body:
+        prec, tid = body[0] >> 4, body[0] & 0xF
+        n = 64 * (2 if prec else 1)
+        raw = np.frombuffer(body[1: 1 + n],
+                            dtype=">u2" if prec else np.uint8)
+        q = np.zeros(64, dtype=np.int32)
+        q[_ZIGZAG] = raw
+        qtabs[tid] = q.reshape(8, 8)
+        body = body[1 + n:]
+
+
+def _read_dht(body: bytes, htabs: dict) -> None:
+    """DHT segment (possibly several tables) → htabs[(class, id)]."""
+    while body:
+        tclass, tid = body[0] >> 4, body[0] & 0xF
+        bits = list(body[1:17])
+        nval = sum(bits)
+        vals = list(body[17: 17 + nval])
+        htabs[(tclass, tid)] = _build_decoder(bits, vals)
+        body = body[17 + nval:]
+
+
 def decode_jpeg(payload: bytes) -> np.ndarray:
     """JFIF decoder → (H, W, C) uint8, or uint16 for 12-bit streams
     (C = 1 or 3, RGB).
 
-    Reads DQT/DHT/SOF0/SOF1/SOF2/SOS/DRI from the stream; supports 8-
-    and 12-bit sequential AND progressive with 4:4:4, 4:2:2 or 4:2:0
-    sampling and restart intervals.  Raises ValueError for arithmetic
-    Lossless (SOF3) streams decode per Annex H (see _decode_lossless;
-    2-16 bit, returns uint8/uint16 without color transform);
-    hierarchical (DHP) progressions per Annex J (see
-    _decode_hierarchical); Adobe 4-component CMYK/YCCK streams
-    (sequential, progressive AND arithmetic) convert to RGB (see
-    _adobe_to_rgb).  Raises ValueError for 4-component lossless
-    streams and differential frames outside a hierarchy."""
+    Reads DQT/DHT/APP14/SOF0/SOF1/SOF2/SOS/DRI from the stream and
+    decodes 8- and 12-bit sequential and progressive Huffman frames with
+    4:4:4, 4:2:2 or 4:2:0 sampling and restart intervals.  Adobe
+    4-component CMYK/YCCK frames convert to RGB (see _adobe_to_rgb).
+    Raises ValueError for every other frame type: lossless (SOF3),
+    differential (SOF5-7, SOF13-15), arithmetic (SOF9-11) and
+    hierarchical (DHP)."""
     d = payload
     if len(d) < 4 or d[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload")
     pos = 2
     qtabs: dict[int, np.ndarray] = {}
     htabs: dict[tuple[int, int], dict] = {}
-    arith_cond: dict = {"dc": {}, "ac": {}}
     frame = None
     restart_interval = 0
     adobe_transform = None   # APP14: 0 CMYK, 1 YCbCr, 2 YCCK
@@ -965,67 +708,20 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
         body = d[pos + 4: pos + 2 + size]
         if pos + 2 + size > len(d):
             raise ValueError(f"truncated segment {marker:02x}")
-        if marker == 0xDB:  # DQT (possibly several tables per segment)
-            b = body
-            while b:
-                prec, tid = b[0] >> 4, b[0] & 0xF
-                n = 64 * (2 if prec else 1)
-                raw = np.frombuffer(b[1: 1 + n],
-                                    dtype=">u2" if prec else np.uint8)
-                q = np.zeros(64, dtype=np.int32)
-                q[_ZIGZAG] = raw
-                qtabs[tid] = q.reshape(8, 8)
-                b = b[1 + n:]
-        elif marker == 0xC4:  # DHT
-            b = body
-            while b:
-                tclass, tid = b[0] >> 4, b[0] & 0xF
-                bits = list(b[1:17])
-                nval = sum(bits)
-                vals = list(b[17: 17 + nval])
-                htabs[(tclass, tid)] = _build_decoder(bits, vals)
-                b = b[17 + nval:]
+        if marker == 0xDB:
+            _read_dqt(body, qtabs)
+        elif marker == 0xC4:
+            _read_dht(body, htabs)
         elif marker == 0xEE and body[:5] == b"Adobe":  # APP14
             adobe_transform = body[11] if len(body) > 11 else 0
-        elif marker == 0xC0 or marker == 0xC1:  # SOF0/1 sequential
+        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 sequential, SOF2
             prec = body[0]
             if prec not in (8, 12):   # 12-bit: extended sequential (C1)
                 raise ValueError(f"unsupported precision {prec}")
             h = int.from_bytes(body[1:3], "big")
             w = int.from_bytes(body[3:5], "big")
             nc = body[5]
-            if nc not in (1, 3, 4):   # 4: Adobe CMYK/YCCK (round 8)
-                raise ValueError(f"unsupported component count {nc}")
-            comps = []
-            for ci in range(nc):
-                cid, samp, qid = body[6 + 3 * ci: 9 + 3 * ci]
-                comps.append({"id": cid, "hs": samp >> 4, "vs": samp & 0xF,
-                              "q": qid})
-            frame = {"h": h, "w": w, "comps": comps, "prec": prec}
-        elif marker == 0xC2:  # SOF2 progressive (round 7)
-            prec = body[0]
-            if prec not in (8, 12):
-                raise ValueError(f"unsupported precision {prec}")
-            h = int.from_bytes(body[1:3], "big")
-            w = int.from_bytes(body[3:5], "big")
-            nc = body[5]
-            if nc not in (1, 3, 4):  # 4: Adobe CMYK/YCCK (round 8)
-                raise ValueError(f"unsupported component count {nc}")
-            comps = []
-            for ci in range(nc):
-                cid, samp, qid = body[6 + 3 * ci: 9 + 3 * ci]
-                comps.append({"id": cid, "hs": samp >> 4, "vs": samp & 0xF,
-                              "q": qid})
-            frame = {"h": h, "w": w, "comps": comps, "progressive": True,
-                     "prec": prec}
-        elif marker in (0xC9, 0xCA):  # SOF9/SOF10: arithmetic (round 7)
-            prec = body[0]
-            if prec not in (8, 12):
-                raise ValueError(f"unsupported precision {prec}")
-            h = int.from_bytes(body[1:3], "big")
-            w = int.from_bytes(body[3:5], "big")
-            nc = body[5]
-            if nc not in (1, 3, 4):  # 4: Adobe CMYK/YCCK (round 8)
+            if nc not in (1, 3, 4):   # 4: Adobe CMYK/YCCK
                 raise ValueError(f"unsupported component count {nc}")
             comps = []
             for ci in range(nc):
@@ -1033,100 +729,38 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 comps.append({"id": cid, "hs": samp >> 4, "vs": samp & 0xF,
                               "q": qid})
             frame = {"h": h, "w": w, "comps": comps, "prec": prec,
-                     "arith": True, "progressive": marker == 0xCA}
-        elif marker == 0xCC:  # DAC: arithmetic conditioning
-            b = body
-            while len(b) >= 2:
-                tc, tb, val = b[0] >> 4, b[0] & 0xF, b[1]
-                if tc == 0:
-                    arith_cond["dc"][tb] = (val & 0xF, val >> 4)  # (L, U)
-                else:
-                    arith_cond["ac"][tb] = val                    # Kx
-                b = b[2:]
-        elif marker == 0xC3:  # SOF3 lossless (round 8, T.81 Annex H)
-            prec = body[0]
-            if not 2 <= prec <= 16:
-                raise ValueError(f"unsupported precision {prec}")
-            h = int.from_bytes(body[1:3], "big")
-            w = int.from_bytes(body[3:5], "big")
-            nc = body[5]
-            if nc < 1 or nc > 4:
-                raise ValueError(f"unsupported component count {nc}")
-            comps = []
-            for ci in range(nc):
-                cid, samp, qid = body[6 + 3 * ci: 9 + 3 * ci]
-                comps.append({"id": cid, "hs": samp >> 4, "vs": samp & 0xF,
-                              "q": qid})
-            frame = {"h": h, "w": w, "comps": comps, "prec": prec,
-                     "lossless": True}
-        elif marker == 0xDE:  # DHP: hierarchical progression (round 8)
-            return _decode_hierarchical(d, pos, qtabs, htabs)
-        elif marker in (0xC5, 0xC6, 0xC7, 0xCB,
-                        0xCD, 0xCE, 0xCF):
-            raise ValueError(f"unsupported SOF type {marker:02x} "
-                             "(differential frame outside a "
-                             "hierarchical progression)")
+                     "progressive": marker == 0xC2}
+        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
+                        0xCD, 0xCE, 0xCF, 0xDE):
+            raise ValueError(f"unsupported SOF type {marker:02x}")
         elif marker == 0xDD:  # DRI
             restart_interval = int.from_bytes(body[:2], "big")
         elif marker == 0xDA:  # SOS — entropy data follows
             if frame is None:
                 raise ValueError("SOS before SOF")
             if len(frame["comps"]) == 4:
-                if frame.get("lossless"):
-                    raise ValueError("4-component (CMYK) supported for "
-                                     "DCT frames only")
                 # 4 components with no Adobe marker: assume plain CMYK
                 # (libjpeg's convention)
                 frame["adobe"] = (adobe_transform
                                   if adobe_transform is not None else 0)
-            if frame.get("progressive"):
+            if frame["progressive"]:
                 # multi-scan driver owns the rest of the stream
-                if frame.get("arith"):
-                    from ifeatureomega_cli_spark.operators.jpeg_arith \
-                        import decode_arith_progressive
-
-                    return decode_arith_progressive(
-                        d, pos, frame, qtabs, arith_cond, restart_interval)
                 return _decode_progressive(d, pos, frame, qtabs, htabs,
                                            restart_interval)
-            ns = body[0]
             scan = {}
-            for si in range(ns):
+            for si in range(body[0]):
                 cid, tsel = body[1 + 2 * si: 3 + 2 * si]
                 scan[cid] = (tsel >> 4, tsel & 0xF)
-            data_pos = pos + 2 + size
-            if frame.get("lossless"):
-                predictor = body[1 + 2 * ns]          # Ss = selection 1..7
-                pt = body[3 + 2 * ns] & 0xF           # Al = point transform
-                return _decode_lossless(d, data_pos, frame, scan, htabs,
-                                        predictor, pt, restart_interval)
-            if frame.get("arith"):
-                from ifeatureomega_cli_spark.operators.jpeg_arith import (
-                    decode_arith_scan)
-
-                return decode_arith_scan(d, data_pos, frame, scan, qtabs,
-                                         arith_cond, restart_interval)
-            return _decode_scan(d, data_pos, frame, scan, qtabs, htabs,
-                                restart_interval)
+            return _decode_scan(d, pos + 2 + size, frame, scan, qtabs,
+                                htabs, restart_interval)
         pos += 2 + size
     raise ValueError("no SOS segment")
 
 
 def _decode_scan(d, pos, frame, scan, qtabs, htabs, restart_interval):
-    center = 1 << (frame.get("prec", 8) - 1)   # 128 (8-bit) / 2048 (12-bit)
-    planes, _ = _scan_planes(d, pos, frame, scan, qtabs, htabs,
-                             restart_interval, center)
-    return _planes_to_image(frame, planes)
-
-
-def _scan_planes(d, pos, frame, scan, qtabs, htabs, restart_interval,
-                 center):
-    """Sequential-DCT MCU loop → (per-component planes, end position).
-    `center` is the IDCT level shift — 2^(P-1) for a normal frame, 0
-    for a DIFFERENTIAL frame in a hierarchical progression (Annex J:
-    differential frames code source-minus-reference, which has no
-    level shift)."""
+    """Sequential-DCT MCU loop over one interleaved scan → image."""
     h, w, comps = frame["h"], frame["w"], frame["comps"]
+    center = 1 << (frame["prec"] - 1)   # level shift: 128 / 2048 (12-bit)
     hmax = max(c["hs"] for c in comps)
     vmax = max(c["vs"] for c in comps)
     mcux = -(-w // (8 * hmax))
@@ -1177,364 +811,7 @@ def _scan_planes(d, pos, frame, scan, qtabs, htabs, restart_interval,
                         x0 = (mx * c["hs"] + bx) * 8
                         planes[ci][y0: y0 + 8, x0: x0 + 8] = px
             mcu_count += 1
-    return planes, _next_marker(d, r.pos)
-
-
-def _decode_lossless(d, pos, frame, scan, htabs, predictor, pt,
-                     restart_interval) -> np.ndarray:
-    """SOF3 lossless scan (round 8, ITU T.81 Annex H): no DCT, no
-    quantization — each sample is a Huffman-coded difference (DC-style
-    SSSS category + extended bits; SSSS=16 means diff=32768 with no
-    extra bits) from a neighbor prediction:
-
-        1 Ra   2 Rb   3 Rc   4 Ra+Rb-Rc
-        5 Ra+((Rb-Rc)>>1)   6 Rb+((Ra-Rc)>>1)   7 (Ra+Rb)>>1
-
-    First sample of the scan (and of each restart interval) predicts
-    the midpoint 2^(P-Pt-1); the rest of that first line uses Ra; the
-    first sample of every later line uses Rb (H.1.1).  Arithmetic is
-    modulo 2^16; decoded values are shifted left by the point
-    transform Pt.  No color transform runs — lossless components are
-    emitted as-is (grayscale or RGB-like planes), per common practice
-    (the standard defines none for SOF3).
-
-    Scope: single-component frames at any sampling, or one interleaved
-    scan covering every component with uniform 1x1 sampling (what real
-    lossless writers emit); other layouts raise ValueError.  In
-    particular a multi-component frame written as one scan PER component
-    is refused up front (ADVICE r8: decode_jpeg returns after the first
-    SOS, so silently decoding only the first component's plane would
-    yield a wrong-shaped image).
-    """
-    frame_ids = {c["id"] for c in frame["comps"]}
-    if set(scan) != frame_ids:
-        raise ValueError(
-            f"lossless scan covers components {sorted(scan)} of frame "
-            f"{sorted(frame_ids)} — non-interleaved multi-scan SOF3 is "
-            "outside the decoder's documented scope")
-    h, w = frame["h"], frame["w"]
-    prec = frame["prec"]
-    planes, _ = _lossless_planes(d, pos, frame, scan, htabs, predictor,
-                                 pt, restart_interval)
-    maxval = (1 << prec) - 1
-    dtype = np.uint8 if prec <= 8 else np.uint16
-    out = [np.clip(p.astype(np.int64) << pt, 0, maxval)
-           .astype(dtype)[:h, :w] for p in planes]
-    return np.stack(out, axis=2)
-
-
-def _lossless_planes(d, pos, frame, scan, htabs, predictor, pt,
-                     restart_interval, diff_mode=False):
-    """Lossless sample loop → (per-component int32 planes, end
-    position).  With diff_mode (differential frame in a hierarchical
-    progression, SOF7) there is NO neighbor prediction — each decoded
-    value is the raw signed difference from the reference component
-    (Annex J.2.3); the caller adds it to the reference mod 2^16."""
-    prec = frame["prec"]
-    h, w, comps = frame["h"], frame["w"], frame["comps"]
-    if not diff_mode and not 1 <= predictor <= 7:
-        raise ValueError(f"bad lossless predictor {predictor}")
-    scomps = [c for c in comps if c["id"] in scan]
-    interleaved = len(scomps) > 1
-    if interleaved and any(c["hs"] != 1 or c["vs"] != 1 for c in scomps):
-        raise ValueError("subsampled interleaved lossless scan")
-    hmax = max(c["hs"] for c in comps)
-    vmax = max(c["vs"] for c in comps)
-    dims = []
-    for c in scomps:
-        dims.append((-(-h * c["vs"] // vmax), -(-w * c["hs"] // hmax)))
-    planes = [np.zeros(dim, dtype=np.int32) for dim in dims]
-    tabs = [htabs[(0, scan[c["id"]][0])] for c in scomps]
-    default = 1 << (prec - pt - 1)
-    r = _BitReader(d, pos)
-
-    def read_diff(tab) -> int:
-        ssss = _decode_huff(r, tab)
-        if ssss == 0:
-            return 0
-        if ssss == 16:
-            return 32768
-        return _extend(r.receive(ssss), ssss)
-
-    # restart bookkeeping: (row, col) of the first sample after the
-    # most recent restart, per plane — the H.1.1 start-of-scan rules
-    # re-apply from that position
-    rstart = [(0, 0)] * len(planes)
-
-    def place(pi: int, y: int, x: int, diff: int):
-        p = planes[pi]
-        if diff_mode:          # raw signed difference, no prediction
-            p[y, x] = diff
-            return
-        ry, rx = rstart[pi]
-        if y == ry and x >= rx:
-            if x == rx:
-                px = default
-            else:
-                px = p[y, x - 1]                        # Ra
-        elif x == 0:
-            px = p[y - 1, 0]                            # Rb
-        else:
-            ra = int(p[y, x - 1])
-            rb = int(p[y - 1, x])
-            rc = int(p[y - 1, x - 1])
-            if predictor == 1:
-                px = ra
-            elif predictor == 2:
-                px = rb
-            elif predictor == 3:
-                px = rc
-            elif predictor == 4:
-                px = ra + rb - rc
-            elif predictor == 5:
-                px = ra + ((rb - rc) >> 1)
-            elif predictor == 6:
-                px = rb + ((ra - rc) >> 1)
-            else:
-                px = (ra + rb) >> 1
-        p[y, x] = (int(px) + diff) & 0xFFFF
-
-    if interleaved:
-        ph, pw = dims[0]
-        mcu_count = 0
-        for y in range(ph):
-            for x in range(pw):
-                if restart_interval and mcu_count and \
-                        mcu_count % restart_interval == 0:
-                    r.align_restart()
-                    for pi in range(len(planes)):
-                        rstart[pi] = (y, x)
-                for pi in range(len(planes)):
-                    place(pi, y, x, read_diff(tabs[pi]))
-                mcu_count += 1
-    else:
-        ph, pw = dims[0]
-        mcu_count = 0
-        for y in range(ph):
-            for x in range(pw):
-                if restart_interval and mcu_count and \
-                        mcu_count % restart_interval == 0:
-                    r.align_restart()
-                    rstart[0] = (y, x)
-                place(0, y, x, read_diff(tabs[0]))
-                mcu_count += 1
-
-    return planes, _next_marker(d, r.pos)
-
-
-def _expand_ref(p: np.ndarray, eh: int, ev: int) -> np.ndarray:
-    """EXP reference expansion (T.81 J.1.1.2): double the plane
-    horizontally and/or vertically — even outputs copy the input
-    sample, odd outputs are the rounded mean of the two neighbors,
-    the last column/row replicates the edge."""
-    if eh:
-        h_, w_ = p.shape
-        q = np.empty((h_, 2 * w_), dtype=p.dtype)
-        q[:, 0::2] = p
-        if w_ > 1:
-            q[:, 1:-1:2] = (p[:, :-1] + p[:, 1:] + 1) >> 1
-        q[:, -1] = p[:, -1]
-        p = q
-    if ev:
-        h_, w_ = p.shape
-        q = np.empty((2 * h_, w_), dtype=p.dtype)
-        q[0::2, :] = p
-        if h_ > 1:
-            q[1:-1:2, :] = (p[:-1, :] + p[1:, :] + 1) >> 1
-        q[-1, :] = p[-1, :]
-        p = q
-    return p
-
-
-def _decode_hierarchical(d, pos, qtabs, htabs) -> np.ndarray:
-    """Hierarchical progression driver (round 8, T.81 Annex J).
-
-    `pos` points at the DHP marker.  The progression is a sequence of
-    frames: the first non-differential (SOF0/1 sequential DCT or SOF3
-    lossless, possibly at reduced resolution), later frames
-    DIFFERENTIAL (SOF5 sequential DCT / SOF7 lossless) coding
-    source-minus-reference, where the reference is the accumulated
-    reconstruction, optionally doubled by a preceding EXP marker.
-    Reference accumulation is int32; DCT differentials add rounded
-    IDCT output (no level shift), lossless differentials add mod 2^16.
-    Final assembly clamps to [0, 2^P-1]; a 3-component DCT progression
-    converts YCbCr like the non-hierarchical path, lossless
-    progressions stack components raw (same conventions as the
-    corresponding non-hierarchical decoders).
-
-    Scope (honest): Huffman frames only, uniform 1x1 sampling across
-    components, single-scan frames; progressive (SOF6/2) or
-    arithmetic (SOF13-15/9-11) frames inside a hierarchy raise
-    ValueError.  DNL segments are skipped.
-    """
-    size = int.from_bytes(d[pos + 2: pos + 4], "big")
-    body = d[pos + 4: pos + 2 + size]
-    prec = body[0]
-    h = int.from_bytes(body[1:3], "big")
-    w = int.from_bytes(body[3:5], "big")
-    nc = body[5]
-    if nc == 4:
-        # ADVICE r8 (low): this driver does not parse APP14, so a
-        # 4-component hierarchy would silently fall back to Adobe
-        # transform 0 and decode YCCK to wrong colors — refuse instead
-        # (the documented scope is 1- and 3-component progressions)
-        raise ValueError(
-            "hierarchical: 4-component (CMYK/YCCK) progressions are "
-            "outside the decoder's scope — no APP14 transform parsing")
-    dhp_comps = []
-    for ci in range(nc):
-        cid, samp, qid = body[6 + 3 * ci: 9 + 3 * ci]
-        if samp != 0x11:
-            raise ValueError("hierarchical: only 1x1 sampling supported")
-        dhp_comps.append({"id": cid, "hs": 1, "vs": 1, "q": qid})
-    pos += 2 + size
-
-    refs: dict[int, np.ndarray] = {}
-    pending_exp: tuple[int, int] | None = None
-    restart_interval = 0
-    frame = None
-    initial_lossless = None
-    while pos + 2 <= len(d):
-        if d[pos] != 0xFF:
-            raise ValueError(f"marker expected at {pos}")
-        marker = d[pos + 1]
-        if marker == 0xD9:  # EOI — progression complete
-            break
-        size = int.from_bytes(d[pos + 2: pos + 4], "big")
-        body = d[pos + 4: pos + 2 + size]
-        if marker == 0xDB:
-            b = body
-            while b:
-                tprec, tid = b[0] >> 4, b[0] & 0xF
-                n = 64 * (2 if tprec else 1)
-                raw = np.frombuffer(b[1: 1 + n],
-                                    dtype=">u2" if tprec else np.uint8)
-                q = np.zeros(64, dtype=np.int32)
-                q[_ZIGZAG] = raw
-                qtabs[tid] = q.reshape(8, 8)
-                b = b[1 + n:]
-        elif marker == 0xC4:
-            b = body
-            while b:
-                tclass, tid = b[0] >> 4, b[0] & 0xF
-                bits = list(b[1:17])
-                nval = sum(bits)
-                vals = list(b[17: 17 + nval])
-                htabs[(tclass, tid)] = _build_decoder(bits, vals)
-                b = b[17 + nval:]
-        elif marker == 0xDD:
-            restart_interval = int.from_bytes(body[:2], "big")
-        elif marker == 0xDF:  # EXP
-            pending_exp = (body[0] >> 4, body[0] & 0xF)
-        elif marker == 0xDC:  # DNL — dims come from the SOF here
-            pass
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC7):
-            fprec = body[0]
-            fh = int.from_bytes(body[1:3], "big")
-            fw = int.from_bytes(body[3:5], "big")
-            fnc = body[5]
-            comps = []
-            for ci in range(fnc):
-                cid, samp, qid = body[6 + 3 * ci: 9 + 3 * ci]
-                if samp != 0x11:
-                    raise ValueError(
-                        "hierarchical: only 1x1 sampling supported")
-                comps.append({"id": cid, "hs": 1, "vs": 1, "q": qid})
-            frame = {"h": fh, "w": fw, "comps": comps, "prec": fprec,
-                     "lossless": marker in (0xC3, 0xC7),
-                     "diff": marker in (0xC5, 0xC7)}
-            if initial_lossless is None:
-                initial_lossless = frame["lossless"]
-        elif marker in (0xC2, 0xC6, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError(f"unsupported hierarchical frame type "
-                             f"{marker:02x}")
-        elif marker == 0xDA:
-            if frame is None:
-                raise ValueError("SOS before SOF in hierarchy")
-            ns = body[0]
-            scan = {}
-            for si in range(ns):
-                cid, tsel = body[1 + 2 * si: 3 + 2 * si]
-                scan[cid] = (tsel >> 4, tsel & 0xF)
-            data_pos = pos + 2 + size
-            if frame["lossless"]:
-                predictor = body[1 + 2 * ns]
-                pt = body[3 + 2 * ns] & 0xF
-                if frame["diff"]:
-                    if predictor != 0:
-                        raise ValueError(
-                            "differential lossless scan requires Ss=0")
-                    if pt:
-                        raise ValueError("point transform unsupported "
-                                         "in differential frames")
-                    planes, endpos = _lossless_planes(
-                        d, data_pos, frame, scan, htabs, 0, 0,
-                        restart_interval, diff_mode=True)
-                else:
-                    planes, endpos = _lossless_planes(
-                        d, data_pos, frame, scan, htabs, predictor, pt,
-                        restart_interval)
-                    planes = [p.astype(np.int32) << pt for p in planes]
-            else:
-                center = 0 if frame["diff"] else 1 << (frame["prec"] - 1)
-                fplanes, endpos = _scan_planes(
-                    d, data_pos, frame, scan, qtabs, htabs,
-                    restart_interval, center)
-                planes = [np.rint(p).astype(np.int32) for p in fplanes]
-            scomps = [c for c in frame["comps"] if c["id"] in scan]
-            for plane, c in zip(planes, scomps):
-                plane = plane[:frame["h"], :frame["w"]]
-                if frame["diff"]:
-                    ref = refs.get(c["id"])
-                    if ref is None:
-                        raise ValueError(
-                            f"differential frame for component "
-                            f"{c['id']} with no reference")
-                    if pending_exp:
-                        ref = _expand_ref(ref, *pending_exp)
-                    ref = ref[:frame["h"], :frame["w"]]
-                    if ref.shape != plane.shape:
-                        raise ValueError(
-                            f"reference {ref.shape} does not cover "
-                            f"differential frame {plane.shape}")
-                    if frame["lossless"]:
-                        refs[c["id"]] = (ref + plane) & 0xFFFF
-                    else:
-                        # reference components are reconstructed
-                        # IMAGES — clamp like any decoder output
-                        refs[c["id"]] = np.clip(
-                            ref + plane, 0, (1 << frame["prec"]) - 1)
-                else:
-                    refs[c["id"]] = (plane if frame["lossless"] else
-                                     np.clip(plane, 0,
-                                             (1 << frame["prec"]) - 1))
-            pending_exp = None
-            pos = endpos
-            continue
-        pos += 2 + size
-
-    if initial_lossless is None:
-        raise ValueError("hierarchical progression with no frames")
-    missing = [c["id"] for c in dhp_comps if c["id"] not in refs]
-    if missing:
-        raise ValueError(f"hierarchy ended without components {missing}")
-    planes = []
-    for c in dhp_comps:
-        p = refs[c["id"]]
-        if p.shape != (h, w):
-            raise ValueError(
-                f"component {c['id']} ended at {p.shape}, DHP says "
-                f"{(h, w)} (missing final EXP/differential frame?)")
-        planes.append(p)
-    maxval = (1 << prec) - 1
-    dtype = np.uint8 if prec <= 8 else np.uint16
-    if initial_lossless or len(planes) == 1:
-        out = [np.clip(p, 0, maxval).astype(dtype) for p in planes]
-        return np.stack(out, axis=2)
-    # DCT color progression: same YCbCr finish as the flat decoders
-    full_frame = {"h": h, "w": w, "comps": dhp_comps, "prec": prec}
-    return _planes_to_image(full_frame,
-                            [p.astype(np.float64) for p in planes])
+    return _planes_to_image(frame, planes)
 
 
 def _planes_to_image(frame, planes) -> np.ndarray:
@@ -1542,7 +819,7 @@ def _planes_to_image(frame, planes) -> np.ndarray:
     convert YCbCr → RGB (shared by the sequential and progressive
     paths)."""
     h, w, comps = frame["h"], frame["w"], frame["comps"]
-    prec = frame.get("prec", 8)
+    prec = frame["prec"]
     center, maxval = 1 << (prec - 1), (1 << prec) - 1
     dtype = np.uint8 if prec == 8 else np.uint16
     hmax = max(c["hs"] for c in comps)
@@ -1578,7 +855,7 @@ def _adobe_to_rgb(frame, full, center, maxval, dtype) -> np.ndarray:
     (YCCK) first converts the CMY triplet from YCbCr with the standard
     coefficients; transform 0 is plain (inverted) CMYK.  transform 1
     (YCbCr) is invalid for 4 components and rejected."""
-    transform = frame.get("adobe", 0)
+    transform = frame["adobe"]
     if transform == 2:                               # YCCK
         y, cb, cr, k = full
         cb = cb - center
@@ -1634,25 +911,9 @@ def _decode_progressive(d, pos, frame, qtabs, htabs, restart_interval):
         if pos + 2 + size > len(d):
             raise ValueError(f"truncated segment {marker:02x}")
         if marker == 0xC4:
-            b = body
-            while b:
-                tclass, tid = b[0] >> 4, b[0] & 0xF
-                bits = list(b[1:17])
-                nval = sum(bits)
-                vals = list(b[17: 17 + nval])
-                htabs[(tclass, tid)] = _build_decoder(bits, vals)
-                b = b[17 + nval:]
+            _read_dht(body, htabs)
         elif marker == 0xDB:
-            b = body
-            while b:
-                prec, tid = b[0] >> 4, b[0] & 0xF
-                n = 64 * (2 if prec else 1)
-                raw = np.frombuffer(b[1: 1 + n],
-                                    dtype=">u2" if prec else np.uint8)
-                q = np.zeros(64, dtype=np.int32)
-                q[_ZIGZAG] = raw
-                qtabs[tid] = q.reshape(8, 8)
-                b = b[1 + n:]
+            _read_dqt(body, qtabs)
         elif marker == 0xDD:
             restart_interval = int.from_bytes(body[:2], "big")
         elif marker == 0xDA:
@@ -1682,7 +943,7 @@ def _decode_progressive(d, pos, frame, qtabs, htabs, restart_interval):
         nat[:, _ZIGZAG] = blocks
         nat = nat.reshape(-1, 8, 8) * q[None]
         px = np.einsum("ij,njk,kl->nil", _DCT.T, nat, _DCT) \
-            + (1 << (frame.get("prec", 8) - 1))
+            + (1 << (frame["prec"] - 1))
         planes.append(px.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3)
                       .reshape(bh * 8, bw * 8))
     return _planes_to_image(frame, planes)

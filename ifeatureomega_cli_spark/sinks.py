@@ -20,10 +20,22 @@ def _flatten(df: DataFrame, features_col: str, names: list[str]) -> DataFrame:
     )
 
 
+def _feature_names(df: DataFrame, features_col: str,
+                   names: list[str] | None) -> list[str]:
+    """`names`, or f0..f{n-1} from the width of the first row's vector."""
+    if names is not None:
+        return names
+    first = df.select(features_col).head()
+    if first is None:
+        raise ValueError("cannot infer feature names from an empty "
+                         "DataFrame; pass names=")
+    return [f"f{i}" for i in range(len(first[0]))]
+
+
 def write_csv(df: DataFrame, path: str, features_col: str = "features",
               names: list[str] | None = None, sep: str = ",") -> None:
     if features_col in df.columns:
-        names = names or [f"f{i}" for i in range(len(df.select(features_col).head()[0]))]
+        names = _feature_names(df, features_col, names)
         df = _flatten(df, features_col, names)
     df.write.mode("overwrite").option("header", True).option("sep", sep).csv(path)
 
@@ -57,8 +69,7 @@ def write_arff(df: DataFrame, path: str, features_col: str = "features",
                label_col: str = "label", names: list[str] | None = None,
                relation: str = "descriptor") -> None:
     """WEKA ARFF (ref :3878-3889): header partition + data lines."""
-    n = len(df.select(features_col).head()[0])
-    names = names or [f"f{i}" for i in range(n)]
+    names = _feature_names(df, features_col, names)
     header = [f"@relation {relation}", ""]
     header += [f"@attribute {nm} numeric" for nm in names]
     labels = [str(r[0]) for r in df.select(label_col).distinct().collect()]

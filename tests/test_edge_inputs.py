@@ -199,3 +199,26 @@ def test_extract_many_duplicate_out_names_rejected(spark):
     # distinct normalized names still fine
     out = extract_many(df, ["protein:AAC", "protein:GAAC"])
     assert {"AAC", "GAAC"} <= set(out.columns)
+
+
+def test_sinks_empty_input(spark, tmp_path):
+    """An empty feature table cannot show its vector width: without
+    `names` the CSV and ARFF writers refuse with a ValueError naming the
+    fix; with `names` they write the header-only output."""
+    from ifeatureomega_cli_spark.sinks import write_arff, write_csv
+
+    empty = spark.createDataFrame(
+        [], "id string, features array<double>, label int")
+    for write in (write_csv, write_arff):
+        with pytest.raises(ValueError, match="names="):
+            write(empty, str(tmp_path / f"{write.__name__}_none"))
+
+    write_csv(empty, str(tmp_path / "csv"), names=["a", "b"])
+    csv = spark.read.option("header", True).csv(str(tmp_path / "csv"))
+    assert csv.columns == ["id", "label", "a", "b"] and csv.count() == 0
+
+    write_arff(empty, str(tmp_path / "arff"), names=["a", "b"])
+    lines = [r.value for r in
+             spark.read.text(str(tmp_path / "arff")).collect()]
+    assert lines == ["@relation descriptor", "", "@attribute a numeric",
+                     "@attribute b numeric", "@attribute play {}", "@data"]

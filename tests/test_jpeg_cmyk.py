@@ -96,26 +96,3 @@ def test_four_component_progressive_decodes():
     assert abs(center[0] - 100) <= 3       # 200*128/255
     assert abs(center[1] - 75) <= 3
     assert abs(center[2] - 50) <= 3
-
-
-def test_four_component_arithmetic_decodes():
-    """4-component ARITHMETIC (SOF9 + APP14): the QM-coder scan path
-    is component-generic and finishes through the Adobe conversion."""
-    from ifeatureomega_cli_spark.operators.jpeg_arith import (
-        encode_jpeg_arith)
-
-    img = _flat([200, 150, 100, 128])
-    out = decode_jpeg(encode_jpeg_arith(img, cmyk=True))
-    assert out.shape == (16, 24, 3)
-    center = out[8, 12].astype(int)
-    assert abs(center[0] - 100) <= 3
-    assert abs(center[1] - 75) <= 3
-    assert abs(center[2] - 50) <= 3
-
-
-def test_four_component_lossless_rejected():
-    payload = bytearray(encode_jpeg_adobe(_flat([10, 20, 30, 255])))
-    i = payload.index(b"\xff\xc0")
-    payload[i + 1] = 0xC3                  # relabel SOF0 -> lossless
-    with pytest.raises(ValueError, match="DCT frames only"):
-        decode_jpeg(bytes(payload))

@@ -3,12 +3,13 @@
 A lossy codec cannot round-trip bit-exactly — the tests bound the
 reconstruction error by the quantization step on smooth content, pin
 the bitstream structure, and exercise the decoder paths (4:4:4, 4:2:0,
-restart markers, grayscale, truncation, progressive rejection) that
-real libjpeg-produced files use.  External validity was established
-against real-world JPEGs (standard-encoder files decode correctly,
-including a 477×720 4:2:0 photograph); those files live outside the
-repo, so the hermetic tests drive the same decoder paths via the
-encoder's subsample/restart options instead.
+restart markers, grayscale, 12-bit, truncation) that real
+libjpeg-produced files use, plus the refusal of every frame type
+outside the codec.  External validity was established against
+real-world JPEGs (standard-encoder files decode correctly, including a
+477×720 4:2:0 photograph); those files live outside the repo, so the
+hermetic tests drive the same decoder paths via the encoder's
+subsample/restart options instead.
 """
 
 from __future__ import annotations
@@ -17,7 +18,7 @@ import numpy as np
 import pytest
 
 from ifeatureomega_cli_spark.operators.jpeg import (
-    _UNZIGZAG, _ZIGZAG, decode_jpeg, encode_jpeg)
+    _UNZIGZAG, _ZIGZAG, decode_jpeg, encode_jpeg, encode_jpeg_adobe)
 
 
 def _smooth(h, w, seed=0):
@@ -89,6 +90,21 @@ def test_rejects_malformed_and_truncated():
         decode_jpeg(b"\x00\x01\x02\x03")
 
 
+def test_extended_frame_types_rejected():
+    # lossless (SOF3), differential (SOF5-7, SOF13-15), arithmetic
+    # (SOF9-11) and hierarchical (DHP) frames are outside the codec;
+    # the 4-component stream checks that CMYK takes the same refusal
+    streams = [encode_jpeg(_smooth(16, 16)),
+               encode_jpeg_adobe(np.full((16, 16, 4), 200, np.uint8))]
+    for good in streams:
+        sof_at = good.index(b"\xff\xc0")
+        for marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
+                       0xCD, 0xCE, 0xCF, 0xDE):
+            bad = good[:sof_at + 1] + bytes([marker]) + good[sof_at + 2:]
+            with pytest.raises(ValueError, match=f"SOF type {marker:02x}"):
+                decode_jpeg(bad)
+
+
 def test_roundtrip_property():
     from hypothesis import given, settings
     from hypothesis import strategies as st
@@ -103,6 +119,37 @@ def test_roundtrip_property():
         assert np.abs(dec.astype(int) - img.astype(int)).mean() < 8
 
     prop()
+
+
+# ------------------------------------------ 12-bit extended sequential
+
+def test_12bit_roundtrip_gray_and_rgb():
+    x = np.linspace(0, 4095, 40)[None, :] + np.linspace(0, 300, 24)[:, None]
+    gray = np.clip(x, 0, 4095).astype(np.uint16)
+    got = decode_jpeg(encode_jpeg(gray, bits=12))
+    assert got.dtype == np.uint16 and got.shape == (24, 40, 1)
+    assert np.abs(got[:, :, 0].astype(int) - gray.astype(int)).max() < 64
+
+    rgb = np.stack([gray, 4095 - gray, gray // 2 + 1000], axis=2)
+    got = decode_jpeg(encode_jpeg(rgb, bits=12))
+    assert got.dtype == np.uint16
+    assert np.abs(got.astype(int) - rgb.astype(int)).max() < 128
+
+
+def test_12bit_magnitudes_exceed_8bit_categories():
+    # checkerboard at full 12-bit swing forces AC categories beyond the
+    # Annex-K (8-bit) symbol range — the flat extended tables must carry
+    rng = np.random.RandomState(1)
+    img = (rng.randint(0, 2, (16, 16)) * 4095).astype(np.uint16)
+    got = decode_jpeg(encode_jpeg(img, bits=12))
+    assert got.shape == (16, 16, 1)
+    # extreme blocks survive with bounded quantization error
+    assert np.abs(got[:, :, 0].astype(int) - img.astype(int)).mean() < 600
+
+
+def test_8bit_encoder_rejects_bad_precision():
+    with pytest.raises(ValueError, match="precision"):
+        encode_jpeg(np.zeros((8, 8), dtype=np.uint8), bits=10)
 
 
 # ------------------------------------------------- progressive (round 7)

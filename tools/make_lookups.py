@@ -253,43 +253,3 @@ def make_atom_property_table():
 
 if __name__ == "__main__" and "--atomprop" in sys.argv:
     make_atom_property_table()
-
-
-def make_jpeg_aritab():
-    """Probe the QM-coder probability-estimation state machine (ITU T.81
-    Table D.3 + the fixed 0.5 bin) out of the system libjpeg's .rodata
-    and pin it into resources/jpeg_aritab.json — probed, not
-    transcribed, per the repo's lookup policy: a hand-copied 114-row
-    table could not be validated by shared-table round-trips.  Each
-    entry is [Qe, NMPS, NLPS, SWITCH]; libjpeg packs them as
-    Qe<<16 | NMPS<<8 | SWITCH<<7 | NLPS in 8-byte slots (jaricom.c),
-    located by the unique row-0 pattern 0x5A1D0181."""
-    import glob as _glob
-    import json as _json
-    import struct as _struct
-
-    cands = sorted(_glob.glob("/usr/lib/*/libjpeg.so*")) \
-        + sorted(_glob.glob("/usr/lib/libjpeg.so*"))
-    for so in cands:
-        data = open(so, "rb").read()
-        idx = data.find(_struct.pack("<q", (0x5A1D << 16) | (1 << 8)
-                                     | (1 << 7) | 1))
-        if idx < 0:
-            continue
-        rows = []
-        for k in range(114):
-            v = _struct.unpack_from("<q", data, idx + 8 * k)[0]
-            rows.append([(v >> 16) & 0xFFFF, (v >> 8) & 0xFF,
-                         v & 0x7F, (v >> 7) & 1])
-        assert rows[113] == [0x5A1D, 113, 113, 0], "fixed bin mismatch"
-        assert all(r[1] <= 113 and r[2] <= 113 for r in rows)
-        pkg_res = os.path.join(REPO, "ifeatureomega_cli_spark", "resources")
-        with open(os.path.join(pkg_res, "jpeg_aritab.json"), "w") as f:
-            _json.dump(rows, f)
-        print(f"  jpeg_aritab: 114 states probed from {so}")
-        return
-    raise SystemExit("no libjpeg with an embedded state table found")
-
-
-if __name__ == "__main__" and "--aritab" in sys.argv:
-    make_jpeg_aritab()
