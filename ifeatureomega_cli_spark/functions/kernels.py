@@ -32,6 +32,11 @@ class Ragged:
     dominant redundant memory traffic of the fused path (guide §4.2: make
     the per-batch native work minimal).  Instances are short-lived
     (per-Arrow-batch), so the caches cannot grow unboundedly.
+
+    Pair kernels (tokens ``s`` apart in one row) read the contiguous views
+    ``flat[:-s]`` and ``flat[s:]``: pair ``j`` is ``(flat[j], flat[j + s])``
+    with row id ``row_ids()[j]``.  ``cross_row(s)`` lists the pairs whose
+    second token falls in a later row, which the kernel masks out.
     """
 
     __slots__ = ("flat", "lengths", "offsets", "n", "_rid", "_stripped")
@@ -84,6 +89,15 @@ class Ragged:
         if self._rid is None:
             self._rid = np.repeat(np.arange(self.n), self.lengths)
         return self._rid
+
+    def cross_row(self, s: int) -> np.ndarray:
+        """Ascending flat indices j < N - s whose j + s lies in a later row:
+        each row's last `s` positions, or all of a row shorter than `s`."""
+        j = (self.offsets[1:, None] - np.arange(s, 0, -1)).ravel()
+        # j >= row start drops the positions before a short row, including
+        # the negative ones of a leading empty row
+        keep = (j >= np.repeat(self.offsets[:-1], s)) & (j < len(self.flat) - s)
+        return j[keep]
 
     def strip(self, token: int) -> "Ragged":
         """Drop all occurrences of `token` (gap-stripping, ref :423).
@@ -183,33 +197,28 @@ def kspaced_pair_counts(
 
     Output layout: [gap0 pairs(vocab²), gap1 pairs, ...]; type 1 divides each
     gap block by its own valid-pair count, type 2 leaves raw counts.
-    Position structure is computed once; the validity filter is skipped
-    when the batch is pre-stripped (all ids < vocab), the common case.
+    Pair keys ``row·vocab² + a·vocab + b`` come from the slices ``flat[:-s]``
+    and ``flat[s:]``; cross-row pairs and pairs holding an id >= vocab all
+    go to one junk bin past the last row, so a batch with unknown ids takes
+    the same path as a gap-stripped one.
     """
     n, dim = r.n, vocab * vocab
-    pos = np.arange(len(r.flat)) - np.repeat(r.offsets[:-1], r.lengths)
-    rl = np.repeat(r.lengths, r.lengths)
-    rid = r.row_ids()
-    fast = len(r.flat) == 0 or r.flat.max() < vocab
-    # one preallocated output written block-by-block: the old
-    # per-gap astype(float64) + _safe_div temporary + final concatenate
-    # tripled the memory traffic of an output that is already large
-    # (n × (kspace+1)·vocab² float64) — measured 2.7× on the CKSAAP batch
-    # kernel.  The per-row denominator is the block's valid-pair count
-    # (a bincount over pair row-ids), identical to the old block row-sum.
+    flat, rid = r.flat, r.row_ids()
+    junk = n * dim
+    bad = np.flatnonzero(flat >= vocab)
+    # each gap block is written straight into the output, which at
+    # n × (kspace+1)·vocab² float64 dominates the memory traffic
     out = np.empty((n, (kspace + 1) * dim))
     for g in range(kspace + 1):
-        idx = np.nonzero(pos + g + 2 <= rl)[0]
-        a, b = r.flat[idx], r.flat[idx + g + 1]
-        w = rid[idx]
-        if not fast:
-            ok = (a < vocab) & (b < vocab)
-            a, b, w = a[ok], b[ok], w[ok]
-        c = np.bincount(w * dim + a * vocab + b,
-                        minlength=n * dim).reshape(n, dim)
+        s = g + 1
+        key = rid[:-s] * dim + flat[:-s] * vocab + flat[s:]
+        key[r.cross_row(s)] = junk
+        key[bad[bad < len(key)]] = junk
+        key[bad[bad >= s] - s] = junk
+        c = np.bincount(key, minlength=junk + 1)[:junk].reshape(n, dim)
         block = out[:, g * dim:(g + 1) * dim]
         if normalize:
-            den = np.bincount(w, minlength=n)
+            den = np.bincount(key // dim, minlength=n + 1)[:n]
             den = np.where(den == 0, 1, den).astype(np.float64)
             np.divide(c, den[:, None], out=block)
         else:

@@ -910,29 +910,27 @@ register(DescriptorSpec(
 
 
 def _mk_ctdt(cfg, L):
-    groups = _ctd_groups()
+    groups = _ctd_groups().astype(np.uint8)
 
     def kern(r: Ragged):
         rs = r.strip(PGAP)
-        pos = np.arange(len(rs.flat)) - np.repeat(rs.offsets[:-1], rs.lengths)
-        rl = np.repeat(rs.lengths, rs.lengths)
-        idx = np.nonzero(pos + 1 < rl)[0]
-        rid = rs.row_ids()[idx]
+        n = rs.n
+        # pair j = (j, j + 1) over the slices; class 9 marks the cross-row
+        # pairs, which no transition reads
+        base = rs.row_ids()[:-1] * 10
+        cross = rs.cross_row(1)
         npairs = np.maximum(rs.lengths - 1, 1).astype(np.float64)
-        blocks = []
+        out = np.empty((n, 13 * 3))
         for p in range(13):
             g = groups[p][rs.flat]
-            # one segmented bincount over the 9 ordered pair classes,
-            # transitions read off the (n, 3, 3) count cube
-            cls = g[idx] * 3 + g[idx + 1]
-            c = np.bincount(rid * 9 + cls, minlength=rs.n * 9).reshape(rs.n, 3, 3)
-            out = np.stack([
-                (c[:, 0, 1] + c[:, 1, 0]) / npairs,
-                (c[:, 0, 2] + c[:, 2, 0]) / npairs,
-                (c[:, 1, 2] + c[:, 2, 1]) / npairs,
-            ], axis=1)
-            blocks.append(out)
-        return np.concatenate(blocks, axis=1)
+            cls = g[:-1] * 3 + g[1:]
+            cls[cross] = 9
+            c = np.bincount(base + cls, minlength=n * 10).reshape(n, 10)
+            # Tr1221, Tr1331, Tr2332: classes (0,1)+(1,0), (0,2)+(2,0), (1,2)+(2,1)
+            out[:, 3 * p] = (c[:, 1] + c[:, 3]) / npairs
+            out[:, 3 * p + 1] = (c[:, 2] + c[:, 6]) / npairs
+            out[:, 3 * p + 2] = (c[:, 5] + c[:, 7]) / npairs
+        return out
 
     return kern
 
@@ -946,47 +944,38 @@ register(DescriptorSpec(
 
 
 def _mk_ctdd(cfg, L):
-    # Implementation note (measured, round 3): two "faster" variants were
-    # benchmarked against this nonzero+gather loop on a 2048-row ~200-len
-    # batch — one stable argsort of (row·3+group) per property (189 ms) and
-    # a true vectorized counting sort via masked cumsums (664 ms) vs 127 ms
-    # for this implementation.  numpy's flatnonzero+fancy-gather is already
-    # the cheapest way to get per-(row,group) ordered positions; kept as is.
-    groups = _ctd_groups()
+    groups = _ctd_groups().astype(np.uint8)
+    quarters = np.array([0.25, 0.50, 0.75])
 
     def kern(r: Ragged):
         rs = r.strip(PGAP)
-        n = rs.n
-        rid_all = rs.row_ids()
-        pos1 = (np.arange(len(rs.flat))
-                - np.repeat(rs.offsets[:-1], rs.lengths) + 1)  # 1-based
-        Lrow = rs.lengths.astype(np.float64)
-        out = np.zeros((n, 13 * 15))
-        col = 0
+        n, N = rs.n, len(rs.flat)
+        rid3 = rs.row_ids() * 3
+        # 1-based position in the row, with a trailing 0 that the cutoffs
+        # of a (row, group) without members point at
+        pos1 = np.zeros(N + 1, dtype=np.int64)
+        pos1[:N] = np.arange(1, N + 1) - np.repeat(rs.offsets[:-1], rs.lengths)
+        Lrow = np.maximum(rs.lengths, 1).astype(np.float64)[:, None, None]
+        out = np.empty((n, 13, 3, 5))
         for p in range(13):
             g = groups[p][rs.flat]
-            # one fused bincount gives all three groups' per-row counts
-            cnt3 = np.bincount(rid_all * 3 + g, minlength=n * 3).reshape(n, 3)
-            for grp in range(3):
-                idxm = np.nonzero(g == grp)[0]
-                ppos = pos1[idxm]
-                cnt = cnt3[:, grp]
-                starts = np.concatenate(([0], np.cumsum(cnt)))
-                # cutoffs (ref Count1 :1939-1958): 1st, floor(q·cnt) (min 1), last
-                for qi, q in enumerate((None, 0.25, 0.50, 0.75, 1.0)):
-                    if q is None:
-                        target = np.ones(n, dtype=np.int64)
-                    elif q == 1.0:
-                        target = cnt
-                    else:
-                        target = np.maximum(np.floor(q * cnt).astype(np.int64), 1)
-                    has = cnt > 0
-                    idx = starts[:-1] + np.minimum(target, np.maximum(cnt, 1)) - 1
-                    vals = np.zeros(n)
-                    vals[has] = ppos[idx[has]] / Lrow[has] * 100.0
-                    out[:, col + qi] = vals
-                col += 5
-        return out
+            # a stable sort of a uint8 key is numpy's radix sort: positions
+            # grouped by group, each group in flat (= row-major) order, so
+            # (group, row) blocks start at the exclusive cumsum of the
+            # group-major counts
+            order = np.append(np.argsort(g, kind="stable"), N)
+            cnt = np.bincount(rid3 + g, minlength=n * 3).reshape(n, 3)
+            cnt_gm = cnt.T.ravel()
+            start = (np.cumsum(cnt_gm) - cnt_gm).reshape(3, n).T
+            # cutoffs (ref Count1 :1939-1958): 1st, floor(q·cnt) (min 1), last
+            tgt = np.empty((n, 3, 5), dtype=np.int64)
+            tgt[..., 0] = 1
+            tgt[..., 1:4] = np.maximum(
+                np.floor(cnt[..., None] * quarters).astype(np.int64), 1)
+            tgt[..., 4] = cnt
+            idx = np.where(cnt[..., None] > 0, start[..., None] + tgt - 1, N)
+            out[:, p] = pos1[order[idx]] / Lrow * 100.0
+        return out.reshape(n, 13 * 15)
 
     return kern
 
@@ -1060,20 +1049,27 @@ def _dist_matrices():
 
 
 def _pair_lag_sum(rs: Ragged, M: np.ndarray, nlag: int, mean: bool) -> np.ndarray:
-    """Σ_j M[s_j, s_{j+n}] per row for n=1..nlag (optionally / (L-n))."""
+    """Σ_j M[s_j, s_{j+n}] per row for n=1..nlag (optionally / (L-n)).
+
+    Cross-row pairs weigh 0.0 and x + 0.0 == x, so each row's sum keeps
+    the bits of the sum over its in-row pairs alone."""
     out = np.zeros((rs.n, nlag))
-    pos = np.arange(len(rs.flat)) - np.repeat(rs.offsets[:-1], rs.lengths)
-    rl = np.repeat(rs.lengths, rs.lengths)
-    rid_all = rs.row_ids()
+    rid = rs.row_ids()
     for d in range(1, nlag + 1):
-        ok = pos + d < rl
-        idx = np.nonzero(ok)[0]
-        w = M[rs.flat[idx], rs.flat[idx + d]]
-        s = np.bincount(rid_all[idx], weights=w, minlength=rs.n)
+        w = M[rs.flat[:-d], rs.flat[d:]]
+        w[rs.cross_row(d)] = 0.0
+        s = np.bincount(rid[:-d], weights=w, minlength=rs.n)
         if mean:
             s = s / np.maximum(rs.lengths - d, 1.0)
         out[:, d - 1] = s
     return out
+
+
+def _series_theta(rs: Ragged, outers: list[np.ndarray], lam: int) -> np.ndarray:
+    """Per-property mean lag products, ordered lag-major then property
+    (ref :2348-2352): (n, lam·len(outers))."""
+    return np.stack([_pair_lag_sum(rs, o, lam, mean=True) for o in outers],
+                    axis=2).reshape(rs.n, -1)
 
 
 def _mk_socnumber(cfg, L):
@@ -1178,12 +1174,7 @@ def _mk_apaac(cfg, L):
 
     def kern(r: Ragged):
         rs = r.strip(PGAP)
-        # theta order (ref :2348-2352): for n: for prop
-        cols = []
-        for d in range(1, lam + 1):
-            for p in range(len(outer)):
-                cols.append(_pair_lag_sum(rs, outer[p], d, mean=True)[:, d - 1])
-        theta = np.stack(cols, axis=1)
+        theta = _series_theta(rs, outer, lam)
         counts = K.unigram_counts(rs.remap(perm), 20, normalize=False)
         den = 1.0 + w * theta.sum(axis=1, keepdims=True)
         return np.concatenate([counts / den, w * theta / den], axis=1)
@@ -1785,19 +1776,13 @@ def _register_pse(name: str, comp_k: int, corr_k: int, series: bool,
 
         def kern(r: Ragged):
             rs = r.strip(DGAP)
-            ids, r2 = K.gram_view(rs, 4, corr_k)
+            _, r2 = K.gram_view(rs, 4, corr_k)
             # θ[λ] uses lag λ+1 over the gram series, denominator
             # L - λ - corr_k = N_series - (λ+1)
             if not series:
-                theta = np.zeros((rs.n, lam))
-                for d in range(1, lam + 1):
-                    theta[:, d - 1] = _pair_lag_sum_series(ids, r2, R, d)
+                theta = _pair_lag_sum(r2, R, lam, mean=True)
             else:
-                cols = []
-                for d in range(1, lam + 1):
-                    for p in range(len(outer)):
-                        cols.append(_pair_lag_sum_series(ids, r2, outer[p], d))
-                theta = np.stack(cols, axis=1)
+                theta = _series_theta(r2, outer, lam)
             freq = K.kgram_counts(rs, 4, cfg.get("kmer", comp_k), normalize=True)
             den = 1.0 + w * theta.sum(axis=1, keepdims=True)
             return np.concatenate([freq / den, w * theta / den], axis=1)
@@ -1808,17 +1793,6 @@ def _register_pse(name: str, comp_k: int, corr_k: int, series: bool,
     defaults.update(extra_defaults or {})
     register(DescriptorSpec(name, "dna", mk_names, mk_kernel, ref=ref,
                             defaults=defaults))
-
-
-def _pair_lag_sum_series(ids: np.ndarray, r2, M: np.ndarray, d: int) -> np.ndarray:
-    """Σ_j M[g_j, g_{j+d}] / (N_series - d) over a gram-id series."""
-    pos = np.arange(len(ids)) - np.repeat(r2.offsets[:-1], r2.lengths)
-    rl = np.repeat(r2.lengths, r2.lengths)
-    ok = pos + d < rl
-    idx = np.nonzero(ok)[0]
-    w = M[ids[idx], ids[idx + d]]
-    s = np.bincount(r2.row_ids()[idx], weights=w, minlength=r2.n)
-    return s / np.maximum(r2.lengths - d, 1.0)
 
 
 _register_pse("PseDNC", 2, 2, False, "Di-DNA-Phychem", _DI_DNA_DEFAULT,
@@ -1996,17 +1970,11 @@ def _register_rna_pse(name: str, series: bool, ref: str, extra: dict | None = No
 
         def kern(r: Ragged):
             rs = r.strip(DGAP)
-            ids, r2 = K.gram_view(rs, 4, 2)
+            _, r2 = K.gram_view(rs, 4, 2)
             if not series:
-                theta = np.zeros((rs.n, lam))
-                for d in range(1, lam + 1):
-                    theta[:, d - 1] = _pair_lag_sum_series(ids, r2, R, d)
+                theta = _pair_lag_sum(r2, R, lam, mean=True)
             else:
-                cols = []
-                for d in range(1, lam + 1):
-                    for p in range(len(outer)):
-                        cols.append(_pair_lag_sum_series(ids, r2, outer[p], d))
-                theta = np.stack(cols, axis=1)
+                theta = _series_theta(r2, outer, lam)
             freq = K.kgram_counts(rs, 4, cfg.get("kmer", 2), normalize=True)
             den = 1.0 + w * theta.sum(axis=1, keepdims=True)
             return np.concatenate([freq / den, w * theta / den], axis=1)

@@ -22,13 +22,14 @@ def _flatten(df: DataFrame, features_col: str, names: list[str]) -> DataFrame:
 
 def _feature_names(df: DataFrame, features_col: str,
                    names: list[str] | None) -> list[str]:
-    """`names`, or f0..f{n-1} from the width of the first row's vector."""
+    """`names`, or f0..f{n-1} from the width of the first non-null vector."""
     if names is not None:
         return names
-    first = df.select(features_col).head()
+    col = F.col(features_col)
+    first = df.select(col).where(col.isNotNull()).head()
     if first is None:
-        raise ValueError("cannot infer feature names from an empty "
-                         "DataFrame; pass names=")
+        raise ValueError("cannot infer feature names from a DataFrame "
+                         "without a non-null vector; pass names=")
     return [f"f{i}" for i in range(len(first[0]))]
 
 

@@ -222,3 +222,27 @@ def test_sinks_empty_input(spark, tmp_path):
              spark.read.text(str(tmp_path / "arff")).collect()]
     assert lines == ["@relation descriptor", "", "@attribute a numeric",
                      "@attribute b numeric", "@attribute play {}", "@data"]
+
+
+def test_sinks_null_first_vector(spark, tmp_path):
+    """The vector width comes from the first non-null vector, so a null
+    first row no longer breaks name inference; an all-null column asks
+    for `names=`."""
+    from ifeatureomega_cli_spark.sinks import write_arff, write_csv
+
+    df = spark.createDataFrame([("a", None, 0), ("b", [1.0, 2.0], 1)],
+                               "id string, features array<double>, label int")
+    write_csv(df, str(tmp_path / "csv"))
+    csv = spark.read.option("header", True).csv(str(tmp_path / "csv"))
+    assert csv.columns == ["id", "label", "f0", "f1"]
+    assert sorted((r.id, r.f0, r.f1) for r in csv.collect()) == [
+        ("a", None, None), ("b", "1.0", "2.0")]
+
+    write_arff(df, str(tmp_path / "arff"))
+    lines = [r.value for r in spark.read.text(str(tmp_path / "arff")).collect()]
+    assert lines[2:4] == ["@attribute f0 numeric", "@attribute f1 numeric"]
+
+    nulls = df.where("features IS NULL")
+    for write in (write_csv, write_arff):
+        with pytest.raises(ValueError, match="names="):
+            write(nulls, str(tmp_path / f"{write.__name__}_nulls"))

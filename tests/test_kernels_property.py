@@ -56,22 +56,119 @@ def test_kgram_counts_matches_naive(rows, k):
         assert np.allclose(got[i], exp), (i, s, k)
 
 
+# a leading empty row (offset 0), length-1 rows, all-gap rows and rows
+# shorter than the widest gap, around the drawn ones
+EDGE_TAIL = [[5], [20], [20, 20, 20], [], [1, 2], [3, 20, 4], [0, 0, 0, 0]]
+
+
+def _with_edges(rows):
+    return [[]] + rows + EDGE_TAIL
+
+
+@pytest.mark.parametrize("s", [1, 2, 4])
+def test_cross_row_lists_pairs_leaving_the_row(s):
+    # row lengths 0, 1, s and s+1, after a leading empty row
+    lengths = np.array([0, 0, 1, s, s + 1, 0, s + 1], dtype=np.int64)
+    r = Ragged(np.zeros(int(lengths.sum()), dtype=np.int64), lengths)
+    rid = r.row_ids()
+    N = len(r.flat)
+    want = [j for j in range(N - s) if rid[j + s] != rid[j]]
+    assert r.cross_row(s).tolist() == want
+
+
+@pytest.mark.filterwarnings("error::RuntimeWarning")
 @settings(max_examples=40, deadline=None)
-@given(batches, st.integers(0, 3))
-def test_kspaced_pairs_match_naive(rows, ks):
-    r = _ragged(rows).strip(20)
-    got = kspaced_pair_counts(r, 20, ks, normalize=False)
+@given(st.lists(st.lists(st.integers(0, 22), max_size=30), max_size=10),
+       st.integers(0, 3), st.booleans())
+def test_kspaced_pairs_match_naive(rows, ks, normalize):
+    """Unstripped rows with ids 20..22 at vocab 20: pairs holding one are
+    neither counted nor part of the type-1 denominator."""
+    rows = _with_edges(rows)
+    got = kspaced_pair_counts(_ragged(rows), 20, ks, normalize=normalize)
     for i, row in enumerate(rows):
-        s = _strip(row)
         exp = []
         for g in range(ks + 1):
             block = np.zeros(400)
-            for j in range(len(s)):
-                j2 = j + g + 1
-                if j2 < len(s):
-                    block[s[j] * 20 + s[j2]] += 1
+            for j in range(len(row) - g - 1):
+                a, b = row[j], row[j + g + 1]
+                if a < 20 and b < 20:
+                    block[a * 20 + b] += 1
+            if normalize and block.sum():
+                block /= block.sum()
             exp.append(block)
-        assert np.allclose(got[i], np.concatenate(exp)), (i, s, ks)
+        assert np.array_equal(got[i], np.concatenate(exp)), (i, row, ks)
+
+
+def _ctd(name):
+    from ifeatureomega_cli_spark.functions.registry import _ctd_groups, get_spec
+
+    return get_spec(name).kernel(None, 0), _ctd_groups()
+
+
+@pytest.mark.filterwarnings("error::RuntimeWarning")
+@settings(max_examples=40, deadline=None)
+@given(batches)
+def test_ctdt_matches_naive(rows):
+    """Tr1221/Tr1331/Tr2332 (ref :1853-1937): the share of adjacent pairs
+    that change between the two groups, per property."""
+    rows = _with_edges(rows)
+    kern, groups = _ctd("protein:CTDT")
+    got = kern(_ragged(rows))
+    for i, row in enumerate(rows):
+        s = _strip(row)
+        exp = []
+        for gp in groups:
+            lab = [gp[t] for t in s]
+            pairs = list(zip(lab, lab[1:]))
+            for x, y in ((0, 1), (0, 2), (1, 2)):
+                exp.append(sum(p in ((x, y), (y, x)) for p in pairs)
+                           / max(len(pairs), 1))
+        assert np.array_equal(got[i], exp), (i, s)
+
+
+@pytest.mark.filterwarnings("error::RuntimeWarning")
+@settings(max_examples=40, deadline=None)
+@given(batches)
+def test_ctdd_matches_naive(rows):
+    """Count1 (ref :1939-1958): the 1-based position of a group's first,
+    floor(25/50/75%) (min 1) and last member, as % of the length; 0 when
+    the group is absent."""
+    import math
+
+    rows = _with_edges(rows)
+    kern, groups = _ctd("protein:CTDD")
+    got = kern(_ragged(rows))
+    for i, row in enumerate(rows):
+        s = _strip(row)
+        exp = []
+        for gp in groups:
+            for grp in range(3):
+                at = [j + 1 for j, t in enumerate(s) if gp[t] == grp]
+                cnt = len(at)
+                for cut in (1, math.floor(0.25 * cnt), math.floor(0.50 * cnt),
+                            math.floor(0.75 * cnt), cnt):
+                    exp.append(at[max(cut, 1) - 1] / len(s) * 100 if at else 0)
+        assert np.array_equal(got[i], exp), (i, s)
+
+
+@pytest.mark.filterwarnings("error::RuntimeWarning")
+@settings(max_examples=40, deadline=None)
+@given(batches, st.integers(1, 4))
+def test_pair_lag_sum_matches_naive(rows, nlag):
+    """Σ M[s_j, s_{j+d}] over in-row pairs, summed in row order, with an M
+    of both signs."""
+    from ifeatureomega_cli_spark.functions.registry import _pair_lag_sum
+
+    rows = _with_edges(rows)
+    M = np.random.RandomState(3).rand(20, 20) - 0.5
+    got = _pair_lag_sum(_ragged(rows).strip(20), M, nlag, mean=True)
+    for i, row in enumerate(rows):
+        s = _strip(row)
+        for d in range(1, nlag + 1):
+            tot = 0.0
+            for j in range(len(s) - d):
+                tot += M[s[j], s[j + d]]
+            assert got[i, d - 1] == tot / max(len(s) - d, 1.0), (i, s, d)
 
 
 @settings(max_examples=40, deadline=None)
