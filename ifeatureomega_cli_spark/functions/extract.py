@@ -40,6 +40,18 @@ def _list_array(matrix: np.ndarray, dtype: str = "float64"):
     return pa.ListArray.from_arrays(offsets, pa.array(matrix.ravel()))
 
 
+def batch_kernel(name: str, params: dict | None = None, length: int = 0):
+    """`name`'s kernel ``Ragged -> (n, dim)``, guarded against token ids
+    outside its sequence type's vocabulary: any id outside ``[0, gap]`` is
+    read as the gap id (``Ragged.clamp``), so every descriptor returns a
+    vector for any integer ``tokens`` column.  Both UDF builders run their
+    kernels through here; in-range batches pass through uncopied."""
+    spec = get_spec(name)
+    kern = spec.kernel(params, length)
+    gap = spec.gap
+    return lambda r: kern(r.clamp(gap))
+
+
 def descriptor_udf(name: str, params: dict | None = None, length: int = 0,
                    dtype: str = "float64"):
     """Build the Arrow-native UDF column function for a descriptor.
@@ -60,8 +72,7 @@ def descriptor_udf(name: str, params: dict | None = None, length: int = 0,
     from pyspark.sql.functions import arrow_udf
     from pyspark.sql.types import FloatType
 
-    spec = get_spec(name)
-    kern = spec.kernel(params, length)
+    kern = batch_kernel(name, params, length)
     elem = DoubleType() if dtype == "float64" else FloatType()
 
     @arrow_udf(ArrayType(elem))
@@ -157,7 +168,7 @@ def fused_struct_udf(names: list[str], params: dict[str, dict] | None = None,
     from pyspark.sql.functions import arrow_udf
     from pyspark.sql.types import FloatType, StructField, StructType
 
-    kerns = [get_spec(n).kernel((params or {}).get(n), length) for n in names]
+    kerns = [batch_kernel(n, (params or {}).get(n), length) for n in names]
     out_names = _out_names(names)
     elem = DoubleType() if dtype == "float64" else FloatType()
     schema = StructType([

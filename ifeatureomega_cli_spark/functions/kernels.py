@@ -39,7 +39,8 @@ class Ragged:
     second token falls in a later row, which the kernel masks out.
     """
 
-    __slots__ = ("flat", "lengths", "offsets", "n", "_rid", "_stripped")
+    __slots__ = ("flat", "lengths", "offsets", "n", "_rid", "_stripped",
+                 "_bounds")
 
     def __init__(self, flat: np.ndarray, lengths: np.ndarray):
         self.flat = flat
@@ -48,6 +49,7 @@ class Ragged:
         self.n = len(lengths)
         self._rid = None
         self._stripped: dict[int, "Ragged"] = {}
+        self._bounds = None
 
     @classmethod
     def from_arrays(cls, arrays) -> "Ragged":
@@ -116,6 +118,24 @@ class Ragged:
             lengths = np.bincount(rid, minlength=self.n).astype(np.int64)
             out = Ragged(self.flat[keep], lengths)
         self._stripped[token] = out
+        return out
+
+    def clamp(self, gap: int) -> "Ragged":
+        """Map every id outside ``[0, gap]`` to `gap`, the way the
+        tokenizers mask unknown letters at read time (ref :135).
+
+        The min/max is taken once per batch.  When every id is in range
+        the batch itself is returned (no copy).  The batch never caches
+        itself as its own twin: that reference cycle would keep it alive
+        until the cyclic GC runs."""
+        f = self.flat
+        if self._bounds is None:
+            self._bounds = (f.min(), f.max()) if len(f) else (0, 0)
+        lo, hi = self._bounds
+        if lo >= 0 and hi <= gap:
+            return self
+        out = Ragged(np.where((f < 0) | (f > gap), gap, f), self.lengths)
+        out._rid = self._rid
         return out
 
     def remap(self, mapping: np.ndarray) -> "Ragged":
@@ -281,15 +301,6 @@ def sliding_window_comp(
             res = W.astype(np.float64)
         out[lo:lo + chunk] = res.reshape(nc, -1)
     return out
-
-
-def property_series(r: Ragged, props: np.ndarray) -> np.ndarray:
-    """Map tokens → property floats: (len(flat), n_props).
-
-    `props` is (vocab+1, n_props); gap rows should hold whatever the
-    reference's semantics need (often the 'A' row or 0)."""
-    return props[np.minimum(r.flat, props.shape[0] - 1)]
-
 
 
 def cumulative_frequency(r: Ragged) -> np.ndarray:

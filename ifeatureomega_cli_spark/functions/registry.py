@@ -45,6 +45,10 @@ class DescriptorSpec:
     def kernel(self, cfg: dict | None = None, L: int = 0):
         return self.make_kernel({**self.defaults, **(cfg or {})}, L)
 
+    @property
+    def gap(self) -> int:
+        return PGAP if self.seq_type == "protein" else DGAP
+
 
 DESCRIPTORS: dict[str, DescriptorSpec] = {}
 

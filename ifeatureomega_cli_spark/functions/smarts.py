@@ -680,10 +680,6 @@ class MolProps:
         return self._rsizes
 
 
-def prep(mol: MolGraph) -> MolProps:
-    return MolProps(mol)
-
-
 def _to_bits(arr: np.ndarray) -> int:
     """bool ndarray -> int with bit i set where arr[i] (LSB = index 0)."""
     if not len(arr):

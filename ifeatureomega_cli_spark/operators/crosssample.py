@@ -198,7 +198,6 @@ def knn_features(
     id_col: str = "doc_id",
     out_col: str = "features",
     max_broadcast_train: int = 100_000,
-    train_sample_fraction: float | None = None,
 ) -> DataFrame:
     """Top-k label-vote features vs the training set.
 
@@ -207,18 +206,7 @@ def knn_features(
     through in Arrow batches, distances computed as L gather-adds of
     (batch × n_train).  Bigger training sets dispatch to
     knn_features_distributed — the tiled all-pairs twin that never
-    materializes the training table on the driver.
-
-    `train_sample_fraction` ∈ (0, 1) (the approximate mode for training
-    sets where even tiled O(n_query · n_train) pair volume is unaffordable)
-    routes to the distributed twin's sampled estimator — see its docstring
-    for why sampling, not LSH pruning, is the consistent estimator here.
-    None or ≥ 1.0 means exact, keeping the broadcast fast path for small
-    training sets."""
-    if train_sample_fraction is not None and train_sample_fraction < 1.0:
-        return knn_features_distributed(
-            df, seq_type, tokens_col, label_col, purpose_col, id_col, out_col,
-            train_sample_fraction=train_sample_fraction)
+    materializes the training table on the driver."""
     # bounded probe: limit+count short-circuits instead of scanning the
     # full training set just to learn "is it big"
     if (df.filter(F.col(purpose_col) == "training")
@@ -286,8 +274,6 @@ def knn_features_distributed(
     out_col: str = "features",
     chunk_size: int = 512,
     block_size: int = 2048,
-    train_sample_fraction: float | None = None,
-    sample_seed: int = 7,
 ) -> DataFrame:
     """Exact KNN label-vote features with NO driver-side training collect.
 
@@ -307,32 +293,10 @@ def knn_features_distributed(
     Only two scalar aggregates touch the driver: the training count and the
     label set.  The rank window sorts n_train pair rows per query — the
     unavoidable cost of EXACT votes at k up to 30% of the training set.
-
-    APPROXIMATE MODE (`train_sample_fraction` ∈ (0, 1)): the vote feature
-    is "fraction of label l among the nearest ceil(f·n) training rows" —
-    a quantile-band label fraction.  The consistent cheap estimator of that
-    quantity is the same fraction over a UNIFORM training subsample of m
-    rows at the automatically scaled rank ceil(f·m): error ~ √(p(1−p)/fm),
-    uniform across all 30 k-fractions.  (A banded-LSH near-neighbour
-    pre-filter — the machinery in operators/dedup.py — was considered and
-    rejected: it keeps near-duplicates only, which is unbiased for the
-    top-1% features but systematically starves the top-30% band of its
-    background rows, biasing the large-k votes toward the near-dup labels.)
-    The subsample is a seeded xxhash64 filter: deterministic under retry,
-    no extra scan, and pair volume drops by exactly the sampled fraction.
-    Feature layout and names are unchanged; k values scale with m.
     """
     from pyspark.sql import Window
 
     train = df.filter(F.col(purpose_col) == "training")
-    if train_sample_fraction is not None:
-        if not (0.0 < train_sample_fraction <= 1.0):
-            raise ValueError("train_sample_fraction must be in (0, 1]")
-        if train_sample_fraction < 1.0:
-            train = train.filter(
-                F.pmod(F.xxhash64(F.col(id_col).cast("string"),
-                                  F.lit(sample_seed)), F.lit(1_000_000))
-                < int(train_sample_fraction * 1_000_000))
     per_label = train.groupBy(label_col).count().collect()
     label_set = sorted(int(r[0]) for r in per_label)
     n_train = int(sum(r["count"] for r in per_label))

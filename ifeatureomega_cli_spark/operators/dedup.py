@@ -115,13 +115,6 @@ def _word_hash_shingles(texts: pa.Array, shingle_n: int):
     return xs[first], np.bincount(rs[first], minlength=n).astype(np.int64)
 
 
-def _stable_hash64(s: str) -> int:
-    """Deterministic 64-bit string hash (Python's hash() is per-process
-    randomized — useless across executors)."""
-    return int.from_bytes(hashlib.blake2b(s.encode(), digest_size=8).digest(),
-                          "big", signed=False) & 0x7FFFFFFFFFFFFFFF
-
-
 def exact_dedup(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     normalize: bool = False,

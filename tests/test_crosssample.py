@@ -99,62 +99,3 @@ def test_knn_distributed_training_50x_query_no_broadcast(spark, monkeypatch):
     assert g.shape == w.shape
     assert np.allclose(g, w, rtol=1e-9, atol=1e-12)
 
-
-def test_knn_sampled_estimator_agreement(spark):
-    """Approximate mode: a 10%-sampled training set (10× pair-volume
-    reduction) must reproduce the exact vote features on label-structured
-    data — ≥95% of features within 0.1 and small mean error.  The sampled
-    estimator is the consistent one for quantile-band label fractions (see
-    knn_features_distributed docstring)."""
-    from ifeatureomega_cli_spark.operators.crosssample import (
-        knn_features_distributed)
-
-    rng = np.random.RandomState(13)
-    L, n_train_per, n_test = 30, 500, 60
-    anc = {0: rng.randint(0, 4, size=L), 1: rng.randint(0, 4, size=L)}
-    rows = []
-    i = 0
-    for lab in (0, 1):
-        for j in range(n_train_per + n_test // 2):
-            seq = anc[lab].copy()
-            nmut = rng.randint(0, 4)
-            pos = rng.choice(L, size=nmut, replace=False)
-            seq[pos] = rng.randint(0, 4, size=nmut)
-            purpose = "training" if j < n_train_per else "testing"
-            rows.append((i, seq.astype(int).tolist(), str(lab), purpose))
-            i += 1
-    df = spark.createDataFrame(
-        rows, "doc_id long, tokens array<int>, label string, purpose string")
-
-    exact = (knn_features_distributed(df, "dna")
-             .select("doc_id", "features").toPandas().set_index("doc_id"))
-    approx = (knn_features_distributed(df, "dna", train_sample_fraction=0.1)
-              .select("doc_id", "features").toPandas().set_index("doc_id"))
-    E = np.array(exact.loc[sorted(exact.index)]["features"].tolist())
-    A = np.array(approx.loc[sorted(exact.index)]["features"].tolist())
-    assert E.shape == A.shape
-    diff = np.abs(E - A)
-    agree = (diff <= 0.1).mean()
-    assert agree >= 0.95, f"vote agreement {agree:.3f}"
-    assert diff.mean() <= 0.05, f"mean vote error {diff.mean():.4f}"
-    # the sample really is ~10% (deterministic hash filter)
-    from pyspark.sql import functions as F
-    m = df.filter(F.col("purpose") == "training").filter(
-        F.pmod(F.xxhash64(F.col("doc_id").cast("string"), F.lit(7)),
-               F.lit(1_000_000)) < 100_000).count()
-    assert m <= 0.2 * 2 * n_train_per, f"sample kept {m} of {2*n_train_per}"
-
-
-def test_knn_sample_fraction_one_is_exact(spark):
-    """fraction=1.0 must be bit-identical to the default exact path."""
-    from ifeatureomega_cli_spark.operators.crosssample import (
-        knn_features_distributed)
-
-    sdf = spark.read.parquet(os.path.join(FIXDIR, "dna_tokens.parquet"))
-    a = (knn_features_distributed(sdf, "dna")
-         .select("doc_id", "features").toPandas().set_index("doc_id"))
-    b = (knn_features_distributed(sdf, "dna", train_sample_fraction=1.0)
-         .select("doc_id", "features").toPandas().set_index("doc_id"))
-    ga = np.array(a.loc[sorted(a.index)]["features"].tolist())
-    gb = np.array(b.loc[sorted(a.index)]["features"].tolist())
-    assert np.array_equal(ga, gb)

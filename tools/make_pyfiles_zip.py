@@ -29,11 +29,6 @@ def main() -> str:
             for f in files:
                 full = os.path.join(root, f)
                 z.write(full, os.path.relpath(full, REPO))
-        # resources must ride inside the zip next to the package
-        for root, _dirs, files in os.walk(os.path.join(REPO, "resources")):
-            for f in files:
-                full = os.path.join(root, f)
-                z.write(full, os.path.relpath(full, REPO))
     shutil.copy(os.path.join(REPO, "ifeatureomega_cli_spark", "cli.py"),
                 os.path.join(DIST, "cli.py"))
     print(zpath)
