@@ -45,7 +45,8 @@ def batch_kernel(name: str, params: dict | None = None, length: int = 0):
     outside its sequence type's vocabulary: any id outside ``[0, gap]`` is
     read as the gap id (``Ragged.clamp``), so every descriptor returns a
     vector for any integer ``tokens`` column.  Both UDF builders run their
-    kernels through here; in-range batches pass through uncopied."""
+    kernels through here; in-range batches pass through uncopied, and the
+    kernels of a fused call share one clamped twin per gap id."""
     spec = get_spec(name)
     kern = spec.kernel(params, length)
     gap = spec.gap
@@ -162,8 +163,11 @@ def extract_many(
 def fused_struct_udf(names: list[str], params: dict[str, dict] | None = None,
                      length: int = 0, dtype: str = "float64"):
     """ONE Arrow-native UDF returning a struct with one array field per
-    descriptor: shared zero-copy Ragged build (plus memoized gap-strip /
-    row-id structure shared ACROSS kernels), zero-copy list outputs."""
+    descriptor: one zero-copy Ragged build per batch, zero-copy list
+    outputs.  The kernels share what the batch memoizes (``Ragged``): the
+    row ids, the clamped and gap-stripped twins, and the residue, pair and
+    CTD group-count planes, so each count is made once per batch however
+    many descriptors read it."""
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
     from pyspark.sql.types import FloatType, StructField, StructType

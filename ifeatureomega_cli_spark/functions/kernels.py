@@ -9,11 +9,14 @@ Arrow/pandas-UDF path fast: one Python invocation per ~2048 rows, all work
 inside numpy.
 
 Archetype map (SURVEY.md §2.0):
-  A1 k-gram composition  -> kgram_counts / kspaced_pair_counts
+  A1 k-gram composition  -> kgram_counts / kspaced_pair_counts, reading
+                            the memoized count planes residue_counts
+                            (k = 1) and pair_counts (k = 2)
   A2 positional lookup   -> positional_lookup (equal-length)
   A3 sliding window      -> sliding_window_comp (equal-length)
-  A4 lag autocorrelation -> lag_stats / LagWorkspace
-  A6 reduced alphabet    -> apply a remap array before A1
+  A4 lag autocorrelation -> LagWorkspace / cross_cov
+  A6 reduced alphabet    -> apply a remap array before A1, or multiply
+                            a count plane by a 0/1 group matrix
   A7 cumulative stats    -> cumulative_frequency etc.
 """
 
@@ -25,13 +28,20 @@ import numpy as np
 class Ragged:
     """A batch of variable-length int token rows in flattened form.
 
-    Derived batch structure (row ids, gap-stripped twins) is memoized on the
-    instance: a fused multi-descriptor pass calls ``strip(gap)`` /
-    ``row_ids()`` once per kernel, and the results depend only on the batch —
-    computing them once per batch instead of once per kernel removes the
-    dominant redundant memory traffic of the fused path (guide §4.2: make
-    the per-batch native work minimal).  Instances are short-lived
-    (per-Arrow-batch), so the caches cannot grow unboundedly.
+    Derived per-batch arrays are memoized on the instance (``row_ids``,
+    ``memo``): the row ids, the gap-stripped and clamped twins, and the
+    count planes the composition kernels read — the residue plane
+    (``residue_counts``, per-row token counts), one pair plane per
+    distance ``s`` (``pair_counts``, per-row counts of token pairs ``s``
+    apart) and CTD's group-count plane (registry ``_ctd_counts``).  A
+    fused multi-descriptor pass runs ~8 kernels on one batch; each builds
+    what it needs on first use and reads what an earlier kernel built, so
+    a kernel also runs alone on a fresh batch (guide §4.2: make the
+    per-batch native work minimal).  Memoized arrays are read-only.
+    Nothing memoized points back at the batch: a batch that is its own
+    twin is not stored as one, so dropping the batch frees its memo at
+    once instead of at the next cyclic GC.  Instances are short-lived
+    (per-Arrow-batch), so the memo cannot grow unboundedly.
 
     Pair kernels (tokens ``s`` apart in one row) read the contiguous views
     ``flat[:-s]`` and ``flat[s:]``: pair ``j`` is ``(flat[j], flat[j + s])``
@@ -39,8 +49,8 @@ class Ragged:
     second token falls in a later row, which the kernel masks out.
     """
 
-    __slots__ = ("flat", "lengths", "offsets", "n", "_rid", "_stripped",
-                 "_bounds")
+    __slots__ = ("flat", "lengths", "offsets", "n", "_rid", "_bounds",
+                 "_memo")
 
     def __init__(self, flat: np.ndarray, lengths: np.ndarray):
         self.flat = flat
@@ -48,8 +58,8 @@ class Ragged:
         self.offsets = np.concatenate(([0], np.cumsum(lengths)))
         self.n = len(lengths)
         self._rid = None
-        self._stripped: dict[int, "Ragged"] = {}
         self._bounds = None
+        self._memo: dict = {}
 
     @classmethod
     def from_arrays(cls, arrays) -> "Ragged":
@@ -101,42 +111,55 @@ class Ragged:
         keep = (j >= np.repeat(self.offsets[:-1], s)) & (j < len(self.flat) - s)
         return j[keep]
 
+    def memo(self, key, build):
+        """``build()``, computed once per batch and `key`.  Arrays come
+        back read-only: every kernel of the batch shares them."""
+        try:
+            return self._memo[key]
+        except KeyError:
+            out = self._memo[key] = build()
+            if isinstance(out, np.ndarray):
+                out.flags.writeable = False
+            return out
+
     def strip(self, token: int) -> "Ragged":
         """Drop all occurrences of `token` (gap-stripping, ref :423).
 
         Memoized per token id — every gap-stripping kernel in a fused pass
-        shares one stripped twin.  When the batch contains no such token the
-        batch itself is returned (no copy)."""
-        cached = self._stripped.get(token)
-        if cached is not None:
-            return cached
+        shares one stripped twin.  When the batch contains no such token
+        the batch itself is returned (no copy); the memo then holds None,
+        not the batch."""
+        return self.memo(("strip", token), lambda: self._without(token)) or self
+
+    def _without(self, token: int) -> "Ragged | None":
         keep = self.flat != token
         if keep.all():
-            out = self
-        else:
-            rid = self.row_ids()[keep]
-            lengths = np.bincount(rid, minlength=self.n).astype(np.int64)
-            out = Ragged(self.flat[keep], lengths)
-        self._stripped[token] = out
-        return out
+            return None
+        rid = self.row_ids()[keep]
+        lengths = np.bincount(rid, minlength=self.n).astype(np.int64)
+        return Ragged(self.flat[keep], lengths)
 
     def clamp(self, gap: int) -> "Ragged":
         """Map every id outside ``[0, gap]`` to `gap`, the way the
         tokenizers mask unknown letters at read time (ref :135).
 
         The min/max is taken once per batch.  When every id is in range
-        the batch itself is returned (no copy).  The batch never caches
-        itself as its own twin: that reference cycle would keep it alive
-        until the cyclic GC runs."""
+        the batch itself is returned (no copy); otherwise the clamped twin
+        is memoized per gap, so every kernel of a fused pass shares it and
+        its stripped twin and count planes."""
         f = self.flat
         if self._bounds is None:
             self._bounds = (f.min(), f.max()) if len(f) else (0, 0)
         lo, hi = self._bounds
         if lo >= 0 and hi <= gap:
             return self
-        out = Ragged(np.where((f < 0) | (f > gap), gap, f), self.lengths)
-        out._rid = self._rid
-        return out
+
+        def twin():
+            out = Ragged(np.where((f < 0) | (f > gap), gap, f), self.lengths)
+            out._rid = self._rid
+            return out
+
+        return self.memo(("clamp", gap), twin)
 
     def remap(self, mapping: np.ndarray) -> "Ragged":
         """Apply an alphabet remap (A6) — same shape, new ids.
@@ -157,17 +180,6 @@ class Ragged:
 def _safe_div(num: np.ndarray, den: np.ndarray) -> np.ndarray:
     den = np.where(den == 0, 1.0, den)
     return num / den
-
-
-def unigram_counts(r: Ragged, vocab: int, normalize: bool = True) -> np.ndarray:
-    """A1 k=1: per-row token frequency.  Ids >= vocab are ignored."""
-    rid = r.row_ids()
-    ok = r.flat < vocab
-    c = np.bincount(rid[ok] * vocab + r.flat[ok], minlength=r.n * vocab)
-    out = c.reshape(r.n, vocab).astype(np.float64)
-    if normalize:
-        out = _safe_div(out, out.sum(axis=1, keepdims=True))
-    return out
 
 
 def _valid_gram_mask(r: Ragged, span: int) -> np.ndarray:
@@ -198,16 +210,66 @@ def kgram_ids(r: Ragged, vocab: int, k: int, gap: int = 0):
     return ids[ok], r.row_ids()[idx[ok]]
 
 
+def frequencies(c: np.ndarray) -> np.ndarray:
+    """Each row of counts divided by its sum; an all-zero row stays zero."""
+    return _safe_div(c, c.sum(axis=1, keepdims=True))
+
+
+def residue_counts(r: Ragged, vocab: int) -> np.ndarray:
+    """The residue plane: (n, vocab) int64 per-row token counts.  Ids >=
+    vocab are not counted.  Memoized on `r` (read-only)."""
+
+    def build():
+        junk = r.n * vocab
+        key = r.row_ids() * vocab + r.flat
+        key[r.flat >= vocab] = junk
+        return np.bincount(key, minlength=junk + 1)[:junk].reshape(r.n, vocab)
+
+    return r.memo(("residues", vocab), build)
+
+
+def pair_counts(r: Ragged, vocab: int, s: int) -> np.ndarray:
+    """The pair plane at distance `s`: (n, vocab²) per-row counts of the
+    pairs ``(flat[j], flat[j + s])`` inside one row, column
+    ``a·vocab + b``, as int64.  Memoized on `r` (read-only).
+
+    Pair keys ``row·vocab² + a·vocab + b`` come from the slices
+    ``flat[:-s]`` and ``flat[s:]``; cross-row pairs and pairs holding an
+    id >= vocab all go to one junk bin past the last row, so a batch with
+    unknown ids takes the same path as a gap-stripped one."""
+
+    def build():
+        n, dim, flat = r.n, vocab * vocab, r.flat
+        junk = n * dim
+        key = r.row_ids()[:-s] * dim + flat[:-s] * vocab + flat[s:]
+        key[r.cross_row(s)] = junk
+        bad = np.flatnonzero(flat >= vocab)
+        key[bad[bad < len(key)]] = junk
+        key[bad[bad >= s] - s] = junk
+        return np.bincount(key, minlength=junk + 1)[:junk].reshape(n, dim)
+
+    return r.memo(("pairs", vocab, s), build)
+
+
 def kgram_counts(
     r: Ragged, vocab: int, k: int, normalize: bool = True, gap: int = 0
 ) -> np.ndarray:
-    """A1: contiguous (or k-spaced) k-gram composition, dim vocab**k."""
-    dim = vocab**k
-    ids, rid = kgram_ids(r, vocab, k, gap)
-    c = np.bincount(rid * dim + ids, minlength=r.n * dim).reshape(r.n, dim).astype(np.float64)
-    if normalize:
-        c = _safe_div(c, c.sum(axis=1, keepdims=True))
-    return c
+    """A1: contiguous (or k-spaced) k-gram composition, dim vocab**k.
+
+    k = 1 reads the residue plane and k = 2 the pair plane at distance
+    gap + 1; longer grams are counted here.  Counts are integers, so a
+    count, a row sum or a 0/1 matmul of them is exact in float64 in any
+    summation order, and outputs keep their bits whichever kernel built
+    the plane."""
+    if k == 1:
+        c = residue_counts(r, vocab)
+    elif k == 2:
+        c = pair_counts(r, vocab, gap + 1)
+    else:
+        dim = vocab**k
+        ids, rid = kgram_ids(r, vocab, k, gap)
+        c = np.bincount(rid * dim + ids, minlength=r.n * dim).reshape(r.n, dim)
+    return frequencies(c) if normalize else c.astype(np.float64)
 
 
 def kspaced_pair_counts(
@@ -215,32 +277,18 @@ def kspaced_pair_counts(
 ) -> np.ndarray:
     """CKSAAP/CKSNAP (ref :469-508): pair counts at gaps 0..kspace.
 
-    Output layout: [gap0 pairs(vocab²), gap1 pairs, ...]; type 1 divides each
-    gap block by its own valid-pair count, type 2 leaves raw counts.
-    Pair keys ``row·vocab² + a·vocab + b`` come from the slices ``flat[:-s]``
-    and ``flat[s:]``; cross-row pairs and pairs holding an id >= vocab all
-    go to one junk bin past the last row, so a batch with unknown ids takes
-    the same path as a gap-stripped one.
+    Output layout: [gap0 pairs(vocab²), gap1 pairs, ...], gap g read from
+    the pair plane at distance g + 1; type 1 divides each gap block by its
+    own valid-pair count (the plane's row sum), type 2 leaves raw counts.
     """
-    n, dim = r.n, vocab * vocab
-    flat, rid = r.flat, r.row_ids()
-    junk = n * dim
-    bad = np.flatnonzero(flat >= vocab)
-    # each gap block is written straight into the output, which at
-    # n × (kspace+1)·vocab² float64 dominates the memory traffic
-    out = np.empty((n, (kspace + 1) * dim))
+    dim = vocab * vocab
+    out = np.empty((r.n, (kspace + 1) * dim))
     for g in range(kspace + 1):
-        s = g + 1
-        key = rid[:-s] * dim + flat[:-s] * vocab + flat[s:]
-        key[r.cross_row(s)] = junk
-        key[bad[bad < len(key)]] = junk
-        key[bad[bad >= s] - s] = junk
-        c = np.bincount(key, minlength=junk + 1)[:junk].reshape(n, dim)
+        c = pair_counts(r, vocab, g + 1)
         block = out[:, g * dim:(g + 1) * dim]
         if normalize:
-            den = np.bincount(key // dim, minlength=n + 1)[:n]
-            den = np.where(den == 0, 1, den).astype(np.float64)
-            np.divide(c, den[:, None], out=block)
+            den = c.sum(axis=1)
+            np.divide(c, np.where(den == 0, 1, den)[:, None], out=block)
         else:
             block[:] = c
     return out
@@ -309,46 +357,6 @@ def cumulative_frequency(r: Ragged) -> np.ndarray:
     Counts every token — including the gap token, matching the reference
     which counts '-' like any other character.  Equal-length only; (n, L)."""
     return running_count_frequency(r.to_matrix())
-
-
-def lag_stats(x: np.ndarray, r: Ragged, nlag: int) -> dict[str, np.ndarray]:
-    """Per-row lagged statistics of a property series x aligned with r.flat.
-
-    Returns (each (n, nlag) unless noted):
-      raw[d]    = Σ_j x[j]·x[j+d] / (N−d)                (Moreau-Broto)
-      cen[d]    = Σ_j (x[j]−x̄)(x[j+d]−x̄) / (N−d)        (auto-covariance)
-      diffsq[d] = Σ_j (x[j]−x[j+d])²                     (Geary numerator, unscaled)
-      ssq (n,)  = Σ_j (x[j]−x̄)²
-      mean (n,) = x̄
-    All computed with segmented bincounts — no per-row Python.
-    """
-    n = r.n
-    rid = r.row_ids()
-    lengths = r.lengths.astype(np.float64)
-    tot = np.bincount(rid, weights=x, minlength=n)
-    mean = tot / np.maximum(lengths, 1.0)
-    xc = x - mean[rid]
-    ssq = np.bincount(rid, weights=xc * xc, minlength=n)
-
-    pos = np.arange(len(x)) - np.repeat(r.offsets[:-1], r.lengths)
-    rl = np.repeat(r.lengths, r.lengths)
-    raw = np.zeros((n, nlag))
-    cen = np.zeros((n, nlag))
-    diffsq = np.zeros((n, nlag))
-    headssq = np.zeros((n, nlag))  # Σ_{j<N-d} (x[j]-x̄)² (DNA Moran/Geary quirk)
-    for d in range(1, nlag + 1):
-        ok = pos + d < rl
-        idx = np.nonzero(ok)[0]
-        a, b = x[idx], x[idx + d]
-        ac, bc = xc[idx], xc[idx + d]
-        w = rid[idx]
-        denom = np.maximum(lengths - d, 1.0)
-        raw[:, d - 1] = np.bincount(w, weights=a * b, minlength=n) / denom
-        cen[:, d - 1] = np.bincount(w, weights=ac * bc, minlength=n) / denom
-        diffsq[:, d - 1] = np.bincount(w, weights=(a - b) ** 2, minlength=n)
-        headssq[:, d - 1] = np.bincount(w, weights=ac * ac, minlength=n)
-    return {"raw": raw, "cen": cen, "diffsq": diffsq, "ssq": ssq, "mean": mean,
-            "headssq": headssq, "lengths": lengths}
 
 
 def cross_cov(x: np.ndarray, y: np.ndarray, r: Ragged, nlag: int) -> np.ndarray:

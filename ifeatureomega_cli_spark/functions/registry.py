@@ -24,6 +24,7 @@ from ifeatureomega_cli_spark.functions.kernels import Ragged
 
 AA = tk.PROTEIN_AA  # 'ACDEFGHIKLMNPQRSTVWY'
 AA_ALT = tk.PROTEIN_AA_ALT  # 'ARNDCQEGHILKMFPSTWYV'
+ALT_IDS = [AA.index(c) for c in AA_ALT]  # canonical id of each AA_ALT letter
 NT = tk.DNA_NT  # 'ACGT'
 PGAP = tk.PROTEIN_GAP
 DGAP = tk.DNA_GAP
@@ -243,6 +244,17 @@ def _register_grouped_comp(name, k, normalized, prefix, sep, ref, groups=None):
         return [f"{prefix}{c}" for c in out]
 
     def mk_kernel(cfg, L):
+        if k == 1:
+            # 0/1 (20 × groups) matrix: the residue plane summed per group
+            G = np.zeros((len(AA), len(groups)))
+            G[np.arange(len(AA)), gmap[:len(AA)]] = 1.0
+
+            def kern(r: Ragged) -> np.ndarray:
+                c = K.residue_counts(r.strip(PGAP), len(AA)) @ G
+                return K.frequencies(c) if normalized else c
+
+            return kern
+
         def kern(r: Ragged) -> np.ndarray:
             return K.kgram_counts(r.strip(PGAP).remap(gmap), 5, k, normalize=normalized)
 
@@ -618,6 +630,8 @@ _register_a2("DBE", "dna",
              "iFeatureOmegaCLI.py:4890-4936", grams=2, invalid_fill=0.5)
 
 _DI_DNA_DEFAULT = "Twist;Tilt;Roll;Shift;Slide;Rise"  # parameters/DNA_parameters_setting.json
+_DI_RNA_DEFAULT = ("Rise (RNA);Roll (RNA);Shift (RNA);Slide (RNA);"
+                   "Tilt (RNA);Twist (RNA)")
 
 
 def _dpcp2_names(cfg, L):
@@ -883,24 +897,32 @@ def _ctd_groups() -> np.ndarray:
     return LK._npz("ctd_groups.npz")["groups"]  # (13, 21) ints 0..2
 
 
+def _ctd_group_matrix(groups: np.ndarray) -> np.ndarray:
+    """0/1 (20, 39) matrix: residue a → column 3p + its group under
+    property p."""
+    G = np.zeros((len(AA), 3 * len(CTD_PROPS)))
+    p = np.arange(len(CTD_PROPS))[:, None]
+    G[np.arange(len(AA))[None, :], 3 * p + groups[:, :len(AA)]] = 1.0
+    return G
+
+
+def _ctd_counts(rs: Ragged, G: np.ndarray) -> np.ndarray:
+    """The group-count plane: (n, 39) per-row residue counts per
+    (property, group), the residue plane times `G`.  Memoized on the
+    batch; CTDC and CTDD both read it."""
+    return rs.memo("ctd_groups", lambda: K.residue_counts(rs, len(AA)) @ G)
+
+
 def _mk_ctdc(cfg, L):
-    groups = _ctd_groups()
+    G = _ctd_group_matrix(_ctd_groups())
 
     def kern(r: Ragged):
         rs = r.strip(PGAP)
-        rid = rs.row_ids()
         den = np.maximum(rs.lengths, 1).astype(np.float64)[:, None]
-        out = np.empty((rs.n, 13 * 3))
-        for p in range(13):
-            # direct segmented bincount on the remapped ids — no per-property
-            # Ragged twin, one shared row-id array for all 13 properties
-            g = groups[p][rs.flat]
-            c = np.bincount(rid * 3 + g, minlength=rs.n * 3).reshape(rs.n, 3)
-            block = out[:, p * 3:(p + 1) * 3]
-            np.divide(c, den, out=block)
-            # reference computes c3 = 1 - c1 - c2 (ref :1844); with a full
-            # partition of the alphabet that equals the direct frequency
-            block[:, 2] = 1.0 - block[:, 0] - block[:, 1]
+        out = _ctd_counts(rs, G) / den
+        # reference computes c3 = 1 - c1 - c2 (ref :1844); with a full
+        # partition of the alphabet that equals the direct frequency
+        out[:, 2::3] = 1.0 - out[:, 0::3] - out[:, 1::3]
         return out
 
     return kern
@@ -914,27 +936,21 @@ register(DescriptorSpec(
 
 
 def _mk_ctdt(cfg, L):
-    groups = _ctd_groups().astype(np.uint8)
+    groups = _ctd_groups()[:, :len(AA)]
+    # 0/1 (400, 39) matrix: pair a·20 + b → column 3p + t when (a, b) is
+    # transition t of property p.  Tr1221, Tr1331 and Tr2332 are the group
+    # pairs {1,2}, {1,3} and {2,3} in either order: t = lo + hi - 1 over
+    # 0-based groups lo < hi
+    ga, gb = groups[:, :, None], groups[:, None, :]
+    lo, hi = np.minimum(ga, gb), np.maximum(ga, gb)
+    p, a, b = np.nonzero(lo != hi)
+    T = np.zeros((len(AA) ** 2, 3 * len(CTD_PROPS)))
+    T[a * len(AA) + b, 3 * p + lo[p, a, b] + hi[p, a, b] - 1] = 1.0
 
     def kern(r: Ragged):
         rs = r.strip(PGAP)
-        n = rs.n
-        # pair j = (j, j + 1) over the slices; class 9 marks the cross-row
-        # pairs, which no transition reads
-        base = rs.row_ids()[:-1] * 10
-        cross = rs.cross_row(1)
-        npairs = np.maximum(rs.lengths - 1, 1).astype(np.float64)
-        out = np.empty((n, 13 * 3))
-        for p in range(13):
-            g = groups[p][rs.flat]
-            cls = g[:-1] * 3 + g[1:]
-            cls[cross] = 9
-            c = np.bincount(base + cls, minlength=n * 10).reshape(n, 10)
-            # Tr1221, Tr1331, Tr2332: classes (0,1)+(1,0), (0,2)+(2,0), (1,2)+(2,1)
-            out[:, 3 * p] = (c[:, 1] + c[:, 3]) / npairs
-            out[:, 3 * p + 1] = (c[:, 2] + c[:, 6]) / npairs
-            out[:, 3 * p + 2] = (c[:, 5] + c[:, 7]) / npairs
-        return out
+        npairs = np.maximum(rs.lengths - 1, 1).astype(np.float64)[:, None]
+        return (K.pair_counts(rs, len(AA), 1) @ T) / npairs
 
     return kern
 
@@ -948,13 +964,15 @@ register(DescriptorSpec(
 
 
 def _mk_ctdd(cfg, L):
-    groups = _ctd_groups().astype(np.uint8)
+    groups = _ctd_groups()
+    G = _ctd_group_matrix(groups)
+    groups = groups.astype(np.uint8)
     quarters = np.array([0.25, 0.50, 0.75])
 
     def kern(r: Ragged):
         rs = r.strip(PGAP)
         n, N = rs.n, len(rs.flat)
-        rid3 = rs.row_ids() * 3
+        counts = _ctd_counts(rs, G).astype(np.int64).reshape(n, 13, 3)
         # 1-based position in the row, with a trailing 0 that the cutoffs
         # of a (row, group) without members point at
         pos1 = np.zeros(N + 1, dtype=np.int64)
@@ -968,7 +986,7 @@ def _mk_ctdd(cfg, L):
             # (group, row) blocks start at the exclusive cumsum of the
             # group-major counts
             order = np.append(np.argsort(g, kind="stable"), N)
-            cnt = np.bincount(rid3 + g, minlength=n * 3).reshape(n, 3)
+            cnt = counts[:, p]
             cnt_gm = cnt.T.ravel()
             start = (np.cumsum(cnt_gm) - cnt_gm).reshape(3, n).T
             # cutoffs (ref Count1 :1939-1958): 1st, floor(q·cnt) (min 1), last
@@ -1101,13 +1119,12 @@ register(DescriptorSpec(
 def _mk_qsorder(cfg, L):
     sw, gm = _dist_matrices()
     nlag, w = cfg["nlag"], cfg["weight"]
-    perm = tk.perm_for(AA_ALT, gap_id=PGAP)
 
     def kern(r: Ragged):
         rs = r.strip(PGAP)
         tau_sw = _pair_lag_sum(rs, sw**2, nlag, mean=False)
         tau_gm = _pair_lag_sum(rs, gm**2, nlag, mean=False)
-        counts = K.unigram_counts(rs.remap(perm), 20, normalize=False)
+        counts = K.residue_counts(rs, len(AA))[:, ALT_IDS]
         den_sw = 1.0 + w * tau_sw.sum(axis=1, keepdims=True)
         den_gm = 1.0 + w * tau_gm.sum(axis=1, keepdims=True)
         return np.concatenate([
@@ -1149,12 +1166,11 @@ def _mk_paac(cfg, L):
     _, props = _paac_props()
     # Rvalue (ref :2253-2254): mean over props of (P[a]-P[b])^2
     R = ((props[:, :, None] - props[:, None, :]) ** 2).mean(axis=0)
-    perm = tk.perm_for(AA_ALT, gap_id=PGAP)
 
     def kern(r: Ragged):
         rs = r.strip(PGAP)
         theta = _pair_lag_sum(rs, R, lam, mean=True)  # (n, lam)
-        counts = K.unigram_counts(rs.remap(perm), 20, normalize=False)
+        counts = K.residue_counts(rs, len(AA))[:, ALT_IDS]
         den = 1.0 + w * theta.sum(axis=1, keepdims=True)
         return np.concatenate([counts / den, w * theta / den], axis=1)
 
@@ -1173,13 +1189,12 @@ register(DescriptorSpec(
 def _mk_apaac(cfg, L):
     lam, w = cfg["lambdaValue"], cfg["weight"]
     names, props = _paac_props(n_props=2)  # ref :2327 uses rows [1, len-1)
-    perm = tk.perm_for(AA_ALT, gap_id=PGAP)
     outer = [np.outer(props[p], props[p]) for p in range(props.shape[0])]
 
     def kern(r: Ragged):
         rs = r.strip(PGAP)
         theta = _series_theta(rs, outer, lam)
-        counts = K.unigram_counts(rs.remap(perm), 20, normalize=False)
+        counts = K.residue_counts(rs, len(AA))[:, ALT_IDS]
         den = 1.0 + w * theta.sum(axis=1, keepdims=True)
         return np.concatenate([counts / den, w * theta / den], axis=1)
 
@@ -1485,7 +1500,7 @@ def _mk_mmi(cfg, L):
 
     def kern(r: Ragged):
         rs = r.strip(DGAP)
-        f1 = K.unigram_counts(rs, 4, normalize=True)
+        f1 = K.kgram_counts(rs, 4, 1, normalize=True)
         c2 = K.kgram_counts(rs, 4, 2, normalize=False)
         # class counts / (L-1)
         f2 = np.zeros((rs.n, len(cls2)))
@@ -1643,31 +1658,32 @@ register(DescriptorSpec(
 _TRI_DNA_DEFAULT = "Dnase I;Bendability (DNAse)"
 
 
-def _gram_prop_series(rs: Ragged, k: int, prop_row: np.ndarray):
-    ids, r2 = K.gram_view(rs, 4, k)
-    return prop_row[ids], r2
+def _register_na_autocorr(name: str, kind: str, seq_type: str, ref: str):
+    """DNA/RNA NMBroto, Moran and Geary over dinucleotide properties."""
+    key, table, default = {
+        "dna": ("Di-DNA-Phychem", "didnaPhyche", _DI_DNA_DEFAULT),
+        "rna": ("Di-RNA-Phychem", "dirnaPhyche", _DI_RNA_DEFAULT)}[seq_type]
 
-
-def _register_dna_autocorr(name: str, kind: str, ref: str):
     def mk_names(cfg, L):
-        return [f"{name}_{p}.lag{n}" for p in cfg["Di-DNA-Phychem"].split(";")
+        return [f"{name}_{p}.lag{n}" for p in cfg[key].split(";")
                 for n in range(1, cfg["nlag"] + 1)]
 
     def mk_kernel(cfg, L):
-        sel, v = _phyche("didnaPhyche", cfg["Di-DNA-Phychem"].split(";"), znorm=True)
+        sel, v = _phyche(table, cfg[key].split(";"), znorm=True)
         nlag = cfg["nlag"]
+        need = {"broto": ("raw",), "moran": ("cen", "headssq"),
+                "geary": ("diffsq", "headssq")}[kind]
 
         def kern(r: Ragged):
-            rs = r.strip(DGAP)
+            ids, r2 = K.gram_view(r.strip(DGAP), 4, 2)
+            ws = K.LagWorkspace(r2, nlag)
             blocks = []
             for p in range(v.shape[0]):
-                x, r2 = _gram_prop_series(rs, 2, v[p])
-                st = K.lag_stats(x, r2, nlag)
+                st = ws.stats(v[p][ids], need)
                 Nl = st["lengths"][:, None]
                 d = np.arange(1, nlag + 1)[None, :]
                 if kind == "broto":
-                    out = st["raw"]
-                    out = np.where((st["lengths"] <= nlag)[:, None], 0.0, out)
+                    out = np.where((st["lengths"] <= nlag)[:, None], 0.0, st["raw"])
                 elif kind == "moran":
                     # Idup/(headssq/N) (ref :5689-5692); /0 → exception → 0
                     den = st["headssq"] / Nl
@@ -1681,15 +1697,13 @@ def _register_dna_autocorr(name: str, kind: str, ref: str):
 
         return kern
 
-    register(DescriptorSpec(
-        name, "dna", mk_names, mk_kernel, ref=ref,
-        defaults={"Di-DNA-Phychem": _DI_DNA_DEFAULT, "nlag": 3},
-    ))
+    register(DescriptorSpec(name, seq_type, mk_names, mk_kernel, ref=ref,
+                            defaults={key: default, "nlag": 3}))
 
 
-_register_dna_autocorr("NMBroto", "broto", "iFeatureOmegaCLI.py:5611-5671")
-_register_dna_autocorr("Moran", "moran", "iFeatureOmegaCLI.py:5673-5731")
-_register_dna_autocorr("Geary", "geary", "iFeatureOmegaCLI.py:5733-5791")
+_register_na_autocorr("NMBroto", "broto", "dna", "iFeatureOmegaCLI.py:5611-5671")
+_register_na_autocorr("Moran", "moran", "dna", "iFeatureOmegaCLI.py:5673-5731")
+_register_na_autocorr("Geary", "geary", "dna", "iFeatureOmegaCLI.py:5733-5791")
 
 
 def _register_dactac(name: str, k: int, mode: str, prop_key: str, default_props: str, ref: str):
@@ -1722,9 +1736,9 @@ def _register_dactac(name: str, k: int, mode: str, prop_key: str, default_props:
             ids, r2 = K.gram_view(rs, 4, k)
             blocks = []
             if mode in ("ac", "acc"):
+                ws = K.LagWorkspace(r2, nlag)
                 for p in range(v.shape[0]):
-                    st = K.lag_stats(v[p][ids], r2, nlag)
-                    blocks.append(st["cen"])
+                    blocks.append(ws.stats(v[p][ids], ("cen",))["cen"])
             if mode in ("cc", "acc"):
                 series = [v[p][ids] for p in range(v.shape[0])]
                 for a, b in pairs:
@@ -1831,9 +1845,6 @@ for _n in _RNA_SHARED:
     register(DescriptorSpec(_sp.name, "rna", _sp.make_names, _sp.make_kernel,
                             _sp.equal_length, dict(_sp.defaults), _sp.ref))
 
-_DI_RNA_DEFAULT = ("Rise (RNA);Roll (RNA);Shift (RNA);Slide (RNA);"
-                   "Tilt (RNA);Twist (RNA)")
-
 
 def _mk_dpcp_rna(cfg, L):
     sel, v = _phyche("dirnaPhyche", cfg["Di-RNA-Phychem"].split(";"))
@@ -1880,47 +1891,9 @@ register(DescriptorSpec(
 ))
 
 
-def _register_rna_autocorr(name: str, kind: str, ref: str):
-    def mk_names(cfg, L):
-        return [f"{name}_{p}.lag{n}" for p in cfg["Di-RNA-Phychem"].split(";")
-                for n in range(1, cfg["nlag"] + 1)]
-
-    def mk_kernel(cfg, L):
-        sel, v = _phyche("dirnaPhyche", cfg["Di-RNA-Phychem"].split(";"), znorm=True)
-        nlag = cfg["nlag"]
-        need = {"broto": ("raw",), "moran": ("cen", "headssq"),
-                "geary": ("diffsq", "headssq")}[kind]
-
-        def kern(r: Ragged):
-            rs = r.strip(DGAP)
-            ids, r2 = K.gram_view(rs, 4, 2)
-            ws = K.LagWorkspace(r2, nlag)
-            blocks = []
-            for p in range(v.shape[0]):
-                st = ws.stats(v[p][ids], need)
-                Nl = st["lengths"][:, None]
-                d = np.arange(1, nlag + 1)[None, :]
-                if kind == "broto":
-                    out = np.where((st["lengths"] <= nlag)[:, None], 0.0, st["raw"])
-                elif kind == "moran":
-                    den = st["headssq"] / Nl
-                    out = np.where(den != 0, st["cen"] / np.where(den == 0, 1, den), 0.0)
-                else:
-                    num = st["diffsq"] / (2.0 * np.maximum(Nl - d, 1.0))
-                    den = st["headssq"] / np.maximum(Nl - 1.0, 1.0)
-                    out = np.where(den != 0, num / np.where(den == 0, 1, den), 0.0)
-                blocks.append(out)
-            return np.concatenate(blocks, axis=1)
-
-        return kern
-
-    register(DescriptorSpec(name, "rna", mk_names, mk_kernel, ref=ref,
-                            defaults={"Di-RNA-Phychem": _DI_RNA_DEFAULT, "nlag": 3}))
-
-
-_register_rna_autocorr("NMBroto", "broto", "iFeatureOmegaCLI.py:8175-8235")
-_register_rna_autocorr("Moran", "moran", "iFeatureOmegaCLI.py:8237-8295")
-_register_rna_autocorr("Geary", "geary", "iFeatureOmegaCLI.py:8297-8355")
+_register_na_autocorr("NMBroto", "broto", "rna", "iFeatureOmegaCLI.py:8175-8235")
+_register_na_autocorr("Moran", "moran", "rna", "iFeatureOmegaCLI.py:8237-8295")
+_register_na_autocorr("Geary", "geary", "rna", "iFeatureOmegaCLI.py:8297-8355")
 
 
 def _register_rna_dac(name: str, ref: str):
@@ -1935,11 +1908,9 @@ def _register_rna_dac(name: str, ref: str):
         def kern(r: Ragged):
             rs = r.strip(DGAP)
             ids, r2 = K.gram_view(rs, 4, 2)
-            blocks = []
-            for p in range(v.shape[0]):
-                st = K.lag_stats(v[p][ids], r2, nlag)
-                blocks.append(st["cen"])
-            return np.concatenate(blocks, axis=1)
+            ws = K.LagWorkspace(r2, nlag)
+            return np.concatenate([ws.stats(v[p][ids], ("cen",))["cen"]
+                                   for p in range(v.shape[0])], axis=1)
 
         return kern
 
@@ -2037,7 +2008,7 @@ def _mk_distancepair(cfg, L):
         blocks = []
         for d in range(cfg["distance"] + 1):
             if d == 0:
-                c = K.unigram_counts(rs, nc, normalize=True)
+                c = K.kgram_counts(rs, nc, 1, normalize=True)
                 blocks.append(c[:, sing_perm])
             else:
                 # pairs (i, i+d): gap parameter of kgram machinery is d-1

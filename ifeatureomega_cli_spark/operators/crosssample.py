@@ -256,14 +256,6 @@ def knn_features(
     return df.withColumn(out_col, _udf(F.col(tokens_col), F.col(id_col)))
 
 
-def knn_feature_names(n_train: int, labels: list[int]) -> list[str]:
-    return [
-        f"Top{math.ceil(n_train * f)}.label{l}"
-        for f in _TOPK_FRACS
-        for l in labels
-    ]
-
-
 def knn_features_distributed(
     df: DataFrame,
     seq_type: str = "protein",

@@ -65,8 +65,3 @@ def tokenize_dna(seq: str) -> np.ndarray:
     ids = _D_LUT[np.frombuffer(seq.upper().encode("ascii"), dtype=np.uint8)]
     ids = np.where(ids < 0, DNA_GAP, ids)
     return ids.astype(np.int32)
-
-
-def detokenize(tokens: np.ndarray, alphabet: str = PROTEIN_AA, gap: str = "-") -> str:
-    table = alphabet + gap
-    return "".join(table[t] for t in tokens)

@@ -57,3 +57,74 @@ def test_kernel_output_bits_pinned(batch, name):
     out = get_spec(name).kernel(None, 0)(batch)
     assert out.shape[0] == batch.n
     assert hashlib.sha256(out.tobytes()).hexdigest() == GOLDEN[name]
+
+
+def _sha(out: np.ndarray) -> str:
+    return hashlib.sha256(out.tobytes()).hexdigest()
+
+
+def test_shared_planes_do_not_leak_between_kernels(batch):
+    """Every pinned kernel on ONE batch, forward then reversed, with
+    CKSAAP at kspace 5 and DPC type 2 in between: each kernel reads count
+    planes an earlier kernel built and still returns its pinned bits."""
+    r = Ragged(batch.flat, batch.lengths)
+    names = sorted(GOLDEN)
+    for i, order in enumerate((names, names[::-1])):
+        for name in order:
+            assert _sha(get_spec(name).kernel(None, 0)(r)) == GOLDEN[name], name
+        if i == 0:
+            wide = get_spec("protein:CKSAAP type 1").kernel({"kspace": 5}, 0)(r)
+            assert _sha(np.ascontiguousarray(wide[:, :4 * 400])) == \
+                GOLDEN["protein:CKSAAP type 1"]
+            raw = get_spec("protein:DPC type 2").kernel(None, 0)(r)
+            raw[:] = -1.0  # the caller owns its output: planes stay intact
+
+
+def test_gap_free_strip_leaves_no_cycle():
+    """A batch without gap tokens is its own stripped twin; dropping it
+    must free it and its count planes without the cyclic GC."""
+    import gc
+
+    kern = get_spec("protein:CTDC").kernel(None, 0)
+    gc.collect()
+    gc.disable()
+    try:
+        r = Ragged.from_arrays([np.arange(20), np.array([3, 4, 5])])
+        assert r.strip(20) is r
+        kern(r)
+        del r
+        assert gc.collect() == 0
+    finally:
+        gc.enable()
+
+
+def test_fused_call_builds_each_plane_once(monkeypatch):
+    """A batch holding an out-of-vocabulary id gets one clamped twin, so
+    the kernels of one fused call share its strip and count planes."""
+    from collections import Counter
+
+    from ifeatureomega_cli_spark.functions.extract import batch_kernel
+
+    built = Counter()
+    memo = Ragged.memo
+
+    def counting(self, key, build):
+        def count():
+            built[key] += 1
+            return build()
+
+        return memo(self, key, count)
+
+    monkeypatch.setattr(Ragged, "memo", counting)
+    names = ["protein:AAC", "protein:DPC type 1", "protein:CKSAAP type 1",
+             "protein:GAAC", "protein:CTDC", "protein:CTDT", "protein:CTDD",
+             "protein:PAAC"]
+    kerns = [batch_kernel(n) for n in names]
+    r = Ragged.from_arrays([np.array([3, 21, 0, 4, 9, 20, 2, 7]),
+                            np.array([1, 2, 3, -5, 0, 8, 1])])
+    for k in kerns:
+        k(r)
+    assert set(built) == {("clamp", 20), ("strip", 20), ("residues", 20),
+                          ("pairs", 20, 1), ("pairs", 20, 2), ("pairs", 20, 3),
+                          ("pairs", 20, 4), "ctd_groups"}
+    assert set(built.values()) == {1}

@@ -10,7 +10,7 @@ from hypothesis import given, settings, strategies as st
 
 from ifeatureomega_cli_spark.functions.kernels import (
     LagWorkspace, Ragged, kgram_counts, kspaced_pair_counts,
-    running_count_frequency, unigram_counts)
+    running_count_frequency)
 
 token_row = st.lists(st.integers(0, 20), min_size=0, max_size=40)
 batches = st.lists(token_row, min_size=1, max_size=12)
@@ -29,7 +29,7 @@ def _strip(row):
 @given(batches)
 def test_unigram_counts_matches_naive(rows):
     r = _ragged(rows).strip(20)
-    got = unigram_counts(r, 20, normalize=True)
+    got = kgram_counts(r, 20, 1, normalize=True)
     for i, row in enumerate(rows):
         s = _strip(row)
         exp = np.zeros(20)
@@ -97,6 +97,22 @@ def test_kspaced_pairs_match_naive(rows, ks, normalize):
                 block /= block.sum()
             exp.append(block)
         assert np.array_equal(got[i], np.concatenate(exp)), (i, row, ks)
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.lists(st.lists(st.integers(0, 22), max_size=30), max_size=10),
+       st.integers(0, 3), st.booleans())
+def test_kgram_pairs_match_kspaced_blocks(rows, ks, normalize):
+    """k = 2 grams at gap g are CKSAAP's block g, counted alone on a fresh
+    batch and read from a plane a CKSAAP call on a shared batch built."""
+    rows = _with_edges(rows)
+    shared = _ragged(rows)
+    blocks = kspaced_pair_counts(shared, 20, ks, normalize=normalize)
+    for g in range(ks + 1):
+        want = blocks[:, g * 400:(g + 1) * 400]
+        for r in (_ragged(rows), shared):
+            got = kgram_counts(r, 20, 2, normalize=normalize, gap=g)
+            assert np.array_equal(got, want), (g, normalize)
 
 
 def _ctd(name):
